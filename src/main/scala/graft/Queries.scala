@@ -1081,8 +1081,8 @@ object Queries {
         |       count(DISTINCT x) AS n_nodes""".stripMargin)
 
   /** Cypher shortestPath: per-label histogram of MINIMUM hop distances
-    * from the ASIA region within 3 hops. Planned as one source-keyed
-    * frontier BFS (first discovery = min distance,
+    * from the ASIA region within 3 hops. Planned on the frontier kernel
+    * (first discovery = min distance,
     * [[graft.graph.GraphAlgorithms.srcKeyedMinDist]]) — never a path
     * enumeration, so the cost is O(rounds · frontier) where the
     * union-of-expansions form would be O(degree³). */

@@ -48,23 +48,28 @@ object TimeQ {
     def dropQueryRdds(): Unit =
       for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
            if !loadRdds.contains(id)) rdd.unpersist(blocking = true)
+    // a failed run is counted, never timed (Bench.timeOnce's rule): its
+    // elapsed time measures the failure, not the query
     val timings = collection.mutable.Map[String, List[Double]]()
+    val failures = collection.mutable.Map[String, Int]().withDefaultValue(0)
     for (_ <- 1 to runs; (name, fn) <- entries) {
       System.gc(); Thread.sleep(150)
       spark.sparkContext.setJobDescription(s"timeq: $name")
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).count()
+        timings(name) = (System.nanoTime() - t0) / 1e9 :: timings.getOrElse(name, Nil)
+      } catch { case e: Throwable =>
         System.err.println(s"[timeq] $name failed: ${e.getMessage}")
+        failures(name) += 1
       }
-      val t = (System.nanoTime() - t0) / 1e9
-      timings(name) = t :: timings.getOrElse(name, Nil)
       spark.sparkContext.setJobDescription(null)
       dropQueryRdds()
     }
     entries.foreach { case (name, _) =>
       val ts = timings.getOrElse(name, Nil).sorted
       val med = if (ts.isEmpty) -1.0 else ts(ts.length / 2)
-      println(f"TIMEQ $name%-32s median=$med%7.3f  all=${ts.map(t => f"$t%.3f").mkString(",")}")
+      println(f"TIMEQ $name%-32s median=$med%7.3f  failed=${failures(name)}  all=${ts.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()
   }

@@ -1256,8 +1256,8 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
   // the shortestPath clause's path variable (length(p) resolves against it)
   private var spVar: Option[String] = None
 
-  /** `MATCH p = shortestPath((a…)-[:T*lo..hi]-(b…))` planned as a
-    * source-keyed frontier BFS ([[graft.graph.GraphAlgorithms.srcKeyedMinDist]]):
+  /** `MATCH p = shortestPath((a…)-[:T*lo..hi]-(b…))` planned on the
+    * frontier kernel ([[graft.graph.GraphAlgorithms.srcKeyedMinDist]]):
     * the anchored `a` frame seeds one BFS source per binding, `hi` rounds
     * of frontier∘adjacency joins find each reachable node's MINIMUM hop
     * count (first discovery = min distance), and the `(src, v, dist)`
@@ -1303,11 +1303,10 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
       if (rel.relTypes.isEmpty) g.adjPairs
       else g.bidir.where(col("relType").isin(rel.relTypes: _*))
         .select(col("a"), col("b")).distinct()
-    val seeds =
-      if (aCar) base.get
-        .select(col(s"__w_${aPat.varName}_nodeId").as("src")).distinct()
-      else nodeFrame(Nil, aPat)
-        .select(col(s"${aPat.varName}.nodeId").as("src"))
+    val seedId =
+      if (aCar) base.get.select(col(s"__w_${aPat.varName}_nodeId").as("src"))
+      else nodeFrame(Nil, aPat).select(col(s"${aPat.varName}.nodeId").as("src"))
+    val seeds = seedId.select(col("src"), col("src").as("v"))
     // BFS state is O(seeds·V): a property-anchored endpoint seeds ~1
     // source, an unanchored one up to V — size the broadcast guard for
     // the worst case so unselective patterns take the shuffle path (a
@@ -1317,7 +1316,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
       else try math.multiplyExact(g.nodeCount, g.nodeCount)
       catch { case _: ArithmeticException => Long.MaxValue }
     val raw = graft.graph.GraphAlgorithms
-      .srcKeyedMinDist(adj, seeds, hi, stateRows)
+      .srcKeyedMinDist(adj, seeds, hi, stateRows).dist
     val dists = raw.where(col("dist") >= lo)
       .select(col("src"), col("v").as("__spv"),
         col("dist").cast("long").as("__splen"))

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph algorithms expressed as plain DataFrame plans (no GraphX
@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
   * join/aggregate Catalyst can optimize and the iteration count is small
   * and known — unlike PageRank/CC, which run to convergence and are faster
   * on GraphX's specialized Pregel runtime (measured; see GraphXBridge).
+  *
+  * The traversals share two loops. [[srcKeyedMinDist]] is the frontier
+  * kernel behind BFS layers, harmonic centrality, eccentricity, FW-BW
+  * reachability, betweenness' forward sweep and the Cypher
+  * `shortestPath` planner; [[minRelax]] is the min-relaxation loop behind
+  * bounded SCC and SSSP. Both read their stop signal from the round's own
+  * checkpoint ([[checkpointObserved]]), never from a second probe job.
   */
 object GraphAlgorithms {
 
@@ -22,6 +29,23 @@ object GraphAlgorithms {
     * physical choice; results must be invariant to it). */
   private[graft] def stateBroadcastLimit: Long =
     java.lang.Long.getLong("graft.graph.stateBroadcastLimit", 5000000L)
+
+  /** Eagerly localCheckpoint `df` and read `metrics` (named aggregates)
+    * off that same checkpoint job through `Dataset.observe`: a loop's
+    * stop signal costs no second `isEmpty`/`count`/`collect` job. */
+  private def checkpointObserved(df: DataFrame,
+                                 metrics: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
+    (cp, obs.get)
+  }
+
+  /** [[srcKeyedMinDist]]'s result: `layers(t)` holds the checkpointed
+    * `(src, v, dist = t, carried…)` rows first reached at hop t (seeds at
+    * 0) and `rows(t)` its row count, read off that checkpoint. */
+  final case class Layers(layers: IndexedSeq[DataFrame], rows: IndexedSeq[Long]) {
+    def dist: DataFrame = layers.reduce(_ unionByName _)
+  }
 
   /** Triangle counting by degree orientation — the 100 TB shape: every
     * undirected edge is oriented from its lower-(degree, id) endpoint to the
@@ -110,63 +134,41 @@ object GraphAlgorithms {
     val sigmaCap = 1000000L
     val deltaCap = 1000000000000L
     val adj = g.adjPairs
-    // per-layer state is O(sources·V); behind the walkCorpus-style guard it
-    // broadcasts, so the O(E) adjacency is never re-shuffled across the
-    // 2·iters layer joins
-    val nNodes = g.nodeCount
+    // per-layer state is O(sources·V): the same guard bound sizes the
+    // kernel's forward joins and the backward sweep's below
+    val stateRows = g.nodeCount * names.length
     def stateSide(df: DataFrame): DataFrame =
-      if (nNodes * names.length <= stateBroadcastLimit) broadcast(df) else df
+      if (stateRows <= stateBroadcastLimit) broadcast(df) else df
     val anchors = g.nodes
       .where(col("label") === label && col("name").isin(names: _*))
       .select(col("nodeId").as("src"), col("nodeId").as("v"),
-        lit(0).as("d"), lit(1L).as("sigma"))
-    var frontier = anchors.localCheckpoint(true)
-    var visited = frontier
-    // early exit on saturation (the bfsLayers/srcKeyedMinDist rule): an
-    // empty layer makes every deeper layer empty, so the forward sweep
-    // stops at the deepest REACHED layer and the backward sweep starts
-    // there — identical to iterating the empty tail (empty layers
-    // contribute nothing to delta), rounds saved on both sweeps
-    var deepest = 0
-    var t0 = 1
-    while (t0 <= iters && !frontier.isEmpty) {
-      val t = t0
-      frontier = adj.join(stateSide(frontier), col("v") === col("a"))
-        .groupBy(col("src"), col("b").as("v"))
-        .agg(least(sum(col("sigma")), lit(sigmaCap)).as("sigma"))
-        .join(stateSide(visited.select(col("src"), col("v"))),
-          Seq("src", "v"), "left_anti")
-        .select(col("src"), col("v"), lit(t).as("d"), col("sigma"))
-        .localCheckpoint(true)
-      visited = visited.unionByName(frontier)
-      if (!frontier.isEmpty) deepest = t
-      t0 += 1
-    }
-    visited = visited.localCheckpoint(true)
+        lit(1L).as("sigma"))
+    val fwd = srcKeyedMinDist(adj, anchors, iters, stateRows,
+      carry = Some(least(sum(col("sigma")), lit(sigmaCap)).as("sigma")))
+    // the kernel stops at the first empty layer, so the backward sweep
+    // starts at the deepest REACHED one — identical to iterating the
+    // empty tail (empty layers contribute nothing to delta)
+    val deepest = math.max(0, fwd.rows.lastIndexWhere(_ > 0))
     // backward: deepest layer has delta 0; each shallower layer sums the
     // floored per-successor terms (left join keeps leaf deltas at 0)
-    var delta = visited.where(col("d") === deepest)
+    val leaf = fwd.layers(deepest)
       .select(col("src"), col("v"), col("sigma"), lit(0L).as("delta"))
-      .localCheckpoint(true)
-    var acc = delta
-    for (t <- (deepest - 1) to 0 by -1) {
-      val layer = visited.where(col("d") === t)
+    val deltas = fwd.layers.take(deepest).scanRight(leaf) { (layer, dw) =>
       val terms = adj
         .join(stateSide(layer.as("l")), col("l.v") === col("a"))
-        .join(stateSide(delta.as("dw")),
+        .join(stateSide(dw.as("dw")),
           col("dw.src") === col("l.src") && col("dw.v") === col("b"))
         .groupBy(col("l.src").as("src"), col("l.v").as("v"))
         .agg(least(sum(expr(
           "(l.sigma * (1000000 + delta)) div dw.sigma")),
           lit(deltaCap)).as("delta"))
-      delta = layer
+      layer
         .join(terms, Seq("src", "v"), "left")
         .select(col("src"), col("v"), col("sigma"),
           coalesce(col("delta"), lit(0L)).as("delta"))
         .localCheckpoint(true)
-      acc = acc.unionByName(delta)
     }
-    acc.where(col("v") =!= col("src"))
+    deltas.reduce(_ unionByName _).where(col("v") =!= col("src"))
       .groupBy(col("v").as("node_id"))
       .agg(sum(col("delta")).as("bc_micro"))
       .orderBy(col("bc_micro").desc, col("node_id"))
@@ -223,11 +225,12 @@ object GraphAlgorithms {
       .crossJoin(nodes.agg(count(lit(1)).as("n_nodes")))
   }
 
-  /** BFS distance layers from an anchor node set by unrolled min-distance
-    * propagation (`iters` fixed rounds — deterministic and
-    * oracle-expressible, like [[kCoreSizes]]). Each round relaxes one hop:
-    * dist(v) = min(dist(v), min over in-neighbors dist(u)+1). Unreached
-    * nodes are absent from the output. Returns (dist, label, n_nodes).
+  /** BFS distance layers from an anchor node set, bounded at `iters` hops:
+    * every anchor seeds the [[srcKeyedMinDist]] kernel under one constant
+    * source, so dist(v) is the minimum hop count from the set — the same
+    * rows as `iters` unrolled rounds of min-distance propagation (the
+    * oracle's form). Unreached nodes are absent from the output. Returns
+    * (dist, label, n_nodes).
     */
   def bfsLayers(g: PropertyGraph, label: String, names: Seq[String],
                 iters: Int): DataFrame =
@@ -242,57 +245,27 @@ object GraphAlgorithms {
     * same algorithm). */
   def bfsLayers(g: PropertyGraph, label: String, names: Seq[String],
                 iters: Int, adj: DataFrame): DataFrame = {
-    // frontier BFS, not full min-propagation: each round expands only the
-    // newly-discovered layer, so per-round work SHRINKS as the search
-    // saturates (full propagation re-joins the whole reached set every
-    // round). The adjacency is materialized ONCE — each round's eager
-    // frontier checkpoint would otherwise recompute the distinct() shuffle
-    // per round — and small frontiers broadcast under AQE, so the static
-    // side never reshuffles. Result is identical to t rounds of
-    // min-distance propagation at every t (discovery round = min distance).
-    // frontier and dist are O(V): broadcast behind the node-count guard so
-    // the O(E) adjacency never re-shuffles per round (walkCorpus lesson)
-    val nNodes = g.nodeCount
-    def frontierSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
-    var frontier = g.nodes
+    val seeds = g.nodes
       .where(col("label") === label && col("name").isin(names: _*))
-      .select(col("nodeId").as("v"), lit(0).as("d"))
-      .localCheckpoint(true)
-    var dist = frontier
-    var t = 1
-    // early exit on saturation (see srcKeyedMinDist): an empty frontier
-    // makes every later round a no-op — same result, rounds saved
-    while (t <= iters && !frontier.isEmpty) {
-      // dist is referenced twice (anti-join + union) but is a union of
-      // already-materialized frontiers, so the replicated lineage is cheap
-      frontier = adj.join(frontierSide(frontier), col("v") === col("a"))
-        .select(col("b").as("v")).distinct()
-        .join(frontierSide(dist.select(col("v"))), Seq("v"), "left_anti")
-        .select(col("v"), lit(t).as("d"))
-        .localCheckpoint(true)
-      dist = dist.unionByName(frontier)
-      t += 1
-    }
-    dist.join(g.nodes, col("v") === col("nodeId"))
-      .groupBy(col("d").as("dist"), col("label"))
+      .select(lit(0L).as("src"), col("nodeId").as("v"))
+    srcKeyedMinDist(adj, seeds, iters, g.nodeCount).dist
+      .join(g.nodes, col("v") === col("nodeId"))
+      .groupBy(col("dist"), col("label"))
       .agg(count(lit(1)).as("n_nodes"))
   }
 
   /** Per-anchor eccentricity (bounded): the max BFS distance each anchor
-    * reaches within `iters` hops, all anchors in ONE src-keyed frontier
-    * pass (the betweenness forward-sweep shape, [[bfsLayers]] semantics
-    * per source). `max(ecc)` over a pivot set is the standard diameter
-    * lower bound at scale — pivots sample the graph instead of the O(V)
-    * all-pairs sweep, and the bound only tightens as pivots are added.
-    * Frontier and dist are O(anchors·V): broadcast behind the node-count
-    * guard, so the O(E) adjacency never re-shuffles per round. */
+    * reaches within `iters` hops, every anchor its own source in ONE
+    * [[srcKeyedMinDist]] pass ([[bfsLayers]] semantics per source).
+    * `max(ecc)` over a pivot set is the standard diameter lower bound at
+    * scale — pivots sample the graph instead of the O(V) all-pairs sweep,
+    * and the bound only tightens as pivots are added. */
   def eccentricityEst(g: PropertyGraph, label: String, names: Seq[String],
                       iters: Int): DataFrame = {
     val seeds = g.nodes
       .where(col("label") === label && col("name").isin(names: _*))
-      .select(col("nodeId").as("src"))
-    srcKeyedMinDist(g.adjPairs, seeds, iters, g.nodeCount * names.length)
+      .select(col("nodeId").as("src"), col("nodeId").as("v"))
+    srcKeyedMinDist(g.adjPairs, seeds, iters, g.nodeCount * names.length).dist
       .groupBy("src")
       .agg(max("dist").cast("long").as("ecc"),
         count(lit(1)).as("n_reached"))
@@ -300,43 +273,51 @@ object GraphAlgorithms {
       .select(col("name").as("anchor"), col("ecc"), col("n_reached"))
   }
 
-  /** Source-keyed frontier BFS: the minimum hop distance `(src, v, dist)`
-    * from every seed `src` to each node it reaches within `maxHops` over
-    * `adj` (symmetric `(a, b)` pairs), all sources in ONE keyed frontier
-    * pass — [[bfsLayers]] semantics per source (first-discovery round =
-    * min distance, so each `(src, v)` appears exactly once, seeds at
-    * dist 0). Shared core of [[eccentricityEst]] and the Cypher
-    * `shortestPath` clause. State is O(seeds·V), so callers pass their
-    * own `stateRows` bound (seeds·V, like betweenness' sources·V guard):
-    * under the limit the state broadcasts and the O(E) adjacency never
-    * re-shuffles per round; past it the rounds fall back to shuffle
-    * joins — the correct distributed-BFS shape when seeds·V is huge. */
+  /** The frontier kernel — source-keyed BFS: the minimum hop distance
+    * `(src, v, dist)` from every seed key `src` to each node it reaches
+    * within `maxHops` over `adj` (`(a, b)` pairs, read a → b), all sources
+    * in ONE keyed frontier pass. `seeds` holds `(src, v)` start rows at
+    * dist 0 — `v = src` for one search per node, a constant `src` for one
+    * search from a node set. Each round expands only the newest layer
+    * and anti-joins everything reached, so first discovery = min distance
+    * and each `(src, v)` appears once.
+    *
+    * `carry` is an optional named aggregate over the incoming rows of a
+    * `(src, v)` (seeds carry its column too): betweenness' capped σ sum.
+    * State is O(seeds·V), so callers pass their own `stateRows` bound:
+    * under [[stateBroadcastLimit]] the state broadcasts and the O(E)
+    * adjacency never re-shuffles per round; past it the rounds fall back
+    * to shuffle joins — the distributed-BFS shape when seeds·V is huge.
+    * The loop stops at the first empty layer, read off its checkpoint:
+    * every later round would be a no-op, so the result equals the
+    * unrolled oracle's round for round. */
   def srcKeyedMinDist(adj: DataFrame, seeds: DataFrame, maxHops: Int,
-                      stateRows: Long): DataFrame = {
+                      stateRows: Long, carry: Option[Column] = None): Layers = {
     def side(df: DataFrame): DataFrame =
       if (stateRows <= stateBroadcastLimit) broadcast(df) else df
-    var frontier = seeds
-      .select(col("src"), col("src").as("v"), lit(0).as("dist"))
-      .distinct()
-      .localCheckpoint(true)
-    var dist = frontier
-    var t = 1
-    // early exit on saturation: an empty frontier makes every later round
-    // a no-op, so stopping changes NOTHING in the result (the unrolled
-    // oracle agrees round-for-round) and saves the per-round join +
-    // checkpoint once the search has reached everything it ever will —
-    // the isEmpty probe is one cheap scan of the just-materialized frame
-    while (t <= maxHops && !frontier.isEmpty) {
-      frontier = adj.join(side(frontier), col("v") === col("a"))
-        .select(col("src"), col("b").as("v")).distinct()
-        .join(side(dist.select(col("src"), col("v"))),
-          Seq("src", "v"), "left_anti")
-        .select(col("src"), col("v"), lit(t).as("dist"))
-        .localCheckpoint(true)
-      dist = dist.unionByName(frontier)
-      t += 1
+    val carried = seeds.columns.filterNot(Set("src", "v")).map(col).toSeq
+    def layer(df: DataFrame, t: Int): (DataFrame, Long) = {
+      val (cp, m) = checkpointObserved(
+        df.select(Seq(col("src"), col("v"), lit(t).as("dist")) ++ carried: _*),
+        count(lit(1)).as("rows"))
+      (cp, m("rows").asInstanceOf[Long])
     }
-    dist
+    val (seed, n0) = layer(seeds.distinct(), 0)
+    var layers = Vector(seed)
+    var rows = Vector(n0)
+    while (layers.length <= maxHops && rows.last > 0) {
+      val reached = adj.join(side(layers.last), col("v") === col("a"))
+      val next = carry match {
+        case Some(agg) => reached.groupBy(col("src"), col("b").as("v")).agg(agg)
+        case None => reached.select(col("src"), col("b").as("v")).distinct()
+      }
+      val visited = layers.map(_.select(col("src"), col("v"))).reduce(_ unionByName _)
+      val (cp, n) = layer(next.join(side(visited), Seq("src", "v"), "left_anti"),
+        layers.length)
+      layers :+= cp
+      rows :+= n
+    }
+    Layers(layers, rows)
   }
 
   /** Jones–Plassmann greedy coloring, derandomized: each round, every
@@ -559,30 +540,22 @@ object GraphAlgorithms {
     * Hendrickson/Pinar): forward-reach F and backward-reach B from the
     * pivot split the graph into SCC(pivot) = F∩B and three recursion sets
     * (F∖B, B∖F, the remainder), whose sizes this reports. Both searches
-    * are the bounded frontier BFS every traversal here uses; everything
-    * else in the catalog is undirected, so this is the directed-traversal
-    * coverage point. Pivot defaults to the minimum node id in the edge set
-    * (deterministic, oracle-expressible). */
+    * run the [[srcKeyedMinDist]] kernel from the pivot, over the edges and
+    * over their reversal; everything else in the catalog is undirected,
+    * so this is the directed-traversal coverage point. Pivot defaults to
+    * the minimum node id in the edge set (deterministic,
+    * oracle-expressible). The reach state is O(V) ≤ 2·|edges|, the guard
+    * bound, counted off the edge set's own checkpoint. */
   def fwBwPartition(edges: DataFrame, iters: Int): DataFrame = {
-    val dir = edges.select(col("a"), col("b")).distinct().localCheckpoint(true)
+    val (dir, m) = checkpointObserved(edges.select(col("a"), col("b")).distinct(),
+      count(lit(1)).as("edges"))
     val pivot = dir.agg(least(min(col("a")), min(col("b"))).as("v"))
-    def reach(adj: DataFrame): DataFrame = {
-      var frontier = broadcast(pivot).localCheckpoint(true)
-      var seen = frontier
-      var t = 0
-      // early exit on saturation — same result, rounds saved
-      while (t < iters && !frontier.isEmpty) {
-        frontier = adj.join(broadcast(frontier), Seq("v"))
-          .select(col("b").as("v")).distinct()
-          .join(broadcast(seen), Seq("v"), "left_anti")
-          .localCheckpoint(true)
-        seen = seen.unionByName(frontier)
-        t += 1
-      }
-      seen
-    }
-    val fwd = reach(dir.select(col("a").as("v"), col("b")))
-    val bwd = reach(dir.select(col("b").as("v"), col("a").as("b")))
+      .select(lit(0L).as("src"), col("v"))
+    def reach(adj: DataFrame): DataFrame =
+      srcKeyedMinDist(adj, pivot, iters, 2 * m("edges").asInstanceOf[Long])
+        .dist.select(col("v"))
+    val fwd = reach(dir)
+    val bwd = reach(dir.select(col("b").as("a"), col("a").as("b")))
     val nodes = dir.select(col("a").as("v"))
       .unionByName(dir.select(col("b").as("v"))).distinct()
     val f = fwd.withColumn("in_f", lit(1))
@@ -609,42 +582,26 @@ object GraphAlgorithms {
     * next recursion level at scale, exactly like FW-BW's rest set).
     *
     * Scale: per round, one keyed join + one map-side-combinable min per
-    * direction; label state is one (v, m) row per node, monotonically
-    * non-increasing, and the whole pass is 2·iters shuffles on the node
-    * key regardless of SCC count. */
+    * direction ([[minRelax]] with zero weights); label state is one
+    * (v, m) row per node, monotonically non-increasing, and the whole
+    * pass is 2·iters shuffles on the node key regardless of SCC count. */
   def sccBoundedStats(edges: DataFrame, iters: Int): DataFrame = {
     val dadj = edges.select(col("a"), col("b")).distinct()
       .localCheckpoint(true)
     val nodes = dadj.select(col("a").as("v"))
       .unionByName(dadj.select(col("b").as("v"))).distinct()
       .localCheckpoint(true)
-    def minProp(srcCol: String, dstCol: String): DataFrame = {
-      var lab = nodes.select(col("v"), col("v").as("m"))
-      // saturation early-exit, like the BFS family's: labels only ever
-      // DECREASE, so an unchanged exact label sum certifies a fixed point
-      // and the remaining rounds are no-ops (result identical). The sum is
-      // decimal(38,0): exact at any node count, one cheap agg per round
-      // over the just-checkpointed O(V) label state.
-      var prevSum: java.math.BigDecimal = null
-      var t = 0
-      while (t < iters) {
-        val fromNbr = dadj
-          .join(lab.select(col("v").as(dstCol), col("m")), Seq(dstCol))
-          .select(col(srcCol).as("v"), col("m"))
-        lab = lab.unionByName(fromNbr)
-          .groupBy("v").agg(min("m").as("m"))
-          .localCheckpoint(true)
-        val s = lab.agg(sum(col("m").cast("decimal(38,0)")).as("s"))
-          .collect()(0).getDecimal(0)
-        if (s == null || (prevSum != null && prevSum.compareTo(s) == 0))
-          t = iters // converged (or empty graph): remaining rounds are no-ops
-        else { prevSum = s; t += 1 }
-      }
-      lab
-    }
-    val joined = minProp("a", "b").select(col("v"), col("m").as("fm"))
-      .join(minProp("b", "a").select(col("v"), col("m").as("bm")), Seq("v"))
+    val labels = nodes.select(col("v"), col("v").as("m"))
+    // forward-min: a takes b's label along a → b (the min node a reaches);
+    // backward-min: b takes a's (the min node reaching b)
+    val fwd = minRelax(dadj.select(col("b").as("a"), col("a").as("b"),
+      lit(0L).as("w")), labels, iters)
+    val bwd = minRelax(dadj.select(col("a"), col("b"), lit(0L).as("w")),
+      labels, iters)
+    val joined = fwd.select(col("v"), col("m").as("fm"))
+      .join(bwd.select(col("v"), col("m").as("bm")), Seq("v"))
       .localCheckpoint(true)
+    Seq(dadj, nodes, fwd, bwd).foreach(release) // nothing reads them past joined
     val sccs = joined.where(col("fm") === col("bm"))
       .groupBy(col("fm").as("scc")).agg(count(lit(1)).as("sz"))
     sccs.agg(count(lit(1)).as("n_sccs"),
@@ -696,8 +653,9 @@ object GraphAlgorithms {
 
   /** Harmonic centrality of an anchor set: Σ over reached nodes of
     * 1e6 div dist (integer micro-units; unreached nodes contribute 0 by
-    * omission, the harmonic convention). Rides on [[bfsLayers]]'s frontier
-    * BFS — one extra two-column aggregate over the layer histogram. */
+    * omission, the harmonic convention). Rides on [[bfsLayers]] (the
+    * [[srcKeyedMinDist]] kernel) — one extra two-column aggregate over the
+    * layer histogram. */
   def harmonicCentrality(g: PropertyGraph, label: String,
                          names: Seq[String], iters: Int): DataFrame =
     bfsLayers(g, label, names, iters)
@@ -725,30 +683,42 @@ object GraphAlgorithms {
     val src = sources
       .map(_.toDF("v").select(col("v")).distinct())
       .getOrElse(sym.agg(min(col("a")).as("v")))
-    var dist = src.select(col("v"), lit(0L).as("d"))
-    // saturation early-exit (the sccBoundedStats pattern): rows are only
-    // ADDED and distances only DECREASE, so an unchanged (row count,
-    // exact distance sum) pair certifies the fixed point — the remaining
-    // relax rounds are no-ops and the result is identical.
-    var prevCount = -1L
-    var prevSum: java.math.BigDecimal = null
+    minRelax(sym, src.select(col("v"), lit(0L).as("m")), iters)
+      .orderBy(col("m").asc, col("v")).limit(k)
+      .select(col("v").as("node_id"), col("m").as("dist"))
+  }
+
+  /** The min-relaxation loop behind [[sccBoundedStats]] and
+    * [[ssspBounded]]: up to `iters` rounds of
+    * m(v) ← min(m(v), min over edges (a → v) of m(a) + w) over the state
+    * `init` (v, m). Rows are only ADDED and values only DECREASE, so an
+    * unchanged (row count, exact decimal sum of m) pair — read off the
+    * round's own checkpoint — certifies the fixed point: the remaining
+    * rounds are no-ops and the result is identical to the full unroll.
+    * Each replaced round's state is unpersisted once its successor is
+    * checkpointed (no lineage reads it after that). */
+  private def minRelax(edges: DataFrame, init: DataFrame, iters: Int): DataFrame = {
+    var state = init
+    var prev: Option[(Any, Any)] = None
     var t = 0
     while (t < iters) {
-      val relaxed = dist.join(sym, col("v") === col("a"))
-        .select(col("b").as("v"), (col("d") + col("w")).as("d"))
-      dist = dist.unionByName(relaxed).groupBy("v").agg(min("d").as("d"))
-        .localCheckpoint(true)
-      val probe = dist
-        .agg(count(lit(1)).as("c"), sum(col("d").cast("decimal(38,0)")).as("s"))
-        .collect()(0)
-      val c = probe.getLong(0)
-      val s = probe.getDecimal(1)
-      if (c == prevCount && s != null && prevSum != null &&
-          prevSum.compareTo(s) == 0) t = iters // converged: rest are no-ops
-      else { prevCount = c; prevSum = s; t += 1 }
+      val relaxed = edges.join(state.select(col("v").as("a"), col("m")), Seq("a"))
+        .select(col("b").as("v"), (col("m") + col("w")).as("m"))
+      val (next, obs) = checkpointObserved(
+        state.unionByName(relaxed).groupBy("v").agg(min("m").as("m")),
+        count(lit(1)).as("c"), sum(col("m").cast("decimal(38,0)")).as("s"))
+      if (t > 0) release(state)
+      state = next
+      val sig = Some((obs("c"), obs("s")))
+      if (sig == prev) t = iters else { prev = sig; t += 1 }
     }
-    dist.orderBy(col("d").asc, col("v")).limit(k)
-      .select(col("v").as("node_id"), col("d").as("dist"))
+    state
+  }
+
+  /** Drop a checkpointed frame's blocks (a no-op for any other frame). */
+  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** Personalized PageRank from an anchor node set — the graph-RAG

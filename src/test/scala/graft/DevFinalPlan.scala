@@ -12,9 +12,12 @@ object DevFinalPlan {
     spark.sparkContext.setLogLevel("ERROR")
     Queries.warmBucketed(spark, sfDir)
     val df = SparkEntry.queries(name)(spark, sfDir)
-    val n = df.collect().length // executes THIS Dataset's plan
+    // Bench's action: count() runs exactly this global-count plan, so
+    // executing it here dumps the plan the bench times
+    val counted = df.groupBy().count()
+    val n = counted.collect()(0).getLong(0)
     println(s"[finalplan] $name rows=$n")
-    println(df.queryExecution.explainString(
+    println(counted.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
   }
 }

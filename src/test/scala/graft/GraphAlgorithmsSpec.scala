@@ -606,7 +606,13 @@ class GraphAlgorithmsSpec extends SparkSpec {
         iters = 3, k = 10),
       GraphAlgorithms.hits(graph, iters = 2, k = 10),
       // srcKeyedMinDist (eccentricity + Cypher shortestPath BFS core)
-      GraphAlgorithms.eccentricityEst(graph, "A", Seq("n0", "n2"), iters = 3)
+      GraphAlgorithms.eccentricityEst(graph, "A", Seq("n0", "n2"), iters = 3),
+      GraphAlgorithms.bfsLayers(graph, "A", Seq("n0"), iters = 3),
+      GraphAlgorithms.fwBwPartition(edges.toDF("a", "b"), iters = 3),
+      GraphAlgorithms.sccBoundedStats(edges.toDF("a", "b"), iters = 3),
+      GraphAlgorithms.ssspBounded(
+        edges.map { case (a, b) => (a, b, (a * 3 + b) % 5 + 1) }
+          .toDF("a", "b", "w"), iters = 3, k = 10)
     ).map(_.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq)
     val viaBroadcast = runAll()
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -620,6 +626,71 @@ class GraphAlgorithmsSpec extends SparkSpec {
       System.clearProperty("graft.graph.stateBroadcastLimit")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
     }
+  }
+
+  test("the frontier and min-relaxation loops start no probe job: no " +
+    "job's call site is isEmpty/count/collect in GraphAlgorithms") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val graph = g(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L)),
+      Seq(1L -> "A", 2L -> "B", 3L -> "A", 4L -> "B", 5L -> "B"))
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 1L))
+    // a job's short call site is its SQL execution's (the thread that
+    // runs an AQE stage is not the caller's, so the stage name is not)
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobExecs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execSites.put(s.executionId, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobExecs.add(id.toLong))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq(
+        GraphAlgorithms.betweennessTopK(graph, "A", Seq("n1"), iters = 3, k = 10),
+        GraphAlgorithms.bfsLayers(graph, "A", Seq("n1"), iters = 4),
+        GraphAlgorithms.eccentricityEst(graph, "A", Seq("n1", "n3"), 4),
+        GraphAlgorithms.fwBwPartition(edges.toDF("a", "b"), iters = 4),
+        GraphAlgorithms.sccBoundedStats(edges.toDF("a", "b"), iters = 4),
+        GraphAlgorithms.ssspBounded(
+          edges.map { case (a, b) => (a, b, a + b) }.toDF("a", "b", "w"),
+          iters = 4, k = 10)
+      ).foreach(_.collect())
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val sites = jobExecs.asScala.toSeq.map(id => execSites.getOrDefault(id, ""))
+    assert(sites.exists(_.startsWith("localCheckpoint at GraphAlgorithms.scala")),
+      s"the listener saw none of the loops' checkpoints: $sites")
+    val probes = sites.filter(
+      _.matches("(isEmpty|count|collect) at GraphAlgorithms\\.scala:\\d+"))
+    assert(probes.isEmpty, s"probe jobs: ${probes.distinct}")
+  }
+
+  test("min-relaxation releases replaced rounds: sccBoundedStats leaves " +
+    "as many persisted RDDs after 10 rounds as after 2") {
+    // a directed 12-cycle is still relaxing at round 10, so every round
+    // runs and replaces its predecessor's state
+    val edges = (1L to 12L).map(i => (i, i % 12 + 1)).toDF("a", "b")
+    def leftBehind(iters: Int): Int = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val result = GraphAlgorithms.sccBoundedStats(edges, iters)
+      result.collect()
+      val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      // the result's own checkpoint must not be garbage-collected (and so
+      // unpersisted by Spark's cleaner) before it is counted
+      java.lang.ref.Reference.reachabilityFence(result)
+      added.values.foreach(_.unpersist(blocking = true))
+      added.size
+    }
+    assert(leftBehind(10) === leftBehind(2))
   }
 
   test("temporalGrowth: cumulative counts from first occurrences only") {
