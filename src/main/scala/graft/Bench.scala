@@ -8,6 +8,23 @@ object Bench {
     * mean anything. */
   val Runs = 3
 
+  private def r3(v: Double): String =
+    BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** The run's summary line, under 200 bytes whatever the catalog size:
+    * the total of the per-entry medians, the entry count `n`, the `failed`
+    * entries (median -1: no successful run, so left out of the total), the
+    * cores and the scale factor's directory name. Per-entry medians and
+    * spreads go to bench_result.json, not here. */
+  def summary(medians: Map[String, Double], cpus: Int, sfDir: String,
+              runs: Int): String = {
+    val total = medians.values.filter(_ >= 0).sum
+    val failed = medians.values.count(_ < 0)
+    val sf = new java.io.File(sfDir).getName
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${medians.size},""" +
+      s""""failed":$failed,"cpus":$cpus,"sf":"$sf","runs":$runs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -134,25 +151,17 @@ object Bench {
       // from the total (a broken query making the bench faster)
       name -> (if (ok.isEmpty) -1.0 else ok(ok.length / 2))
     }.toMap
-    // Keep the JSON line SHORT: the driver captures only the tail (~2.2 KB)
-    // of the run's output, and rounds 1-3 each emitted a full-precision line
-    // (>2.1 KB) whose head — the "metric" key — fell off the buffer, so
-    // "parsed" came back null three rounds running. 3-decimal medians keep
-    // the whole line comfortably inside the tail window.
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    val json = summary(results, cpus.toInt, sfDir, Runs)
+    // Pickup paths, ordered so the LAST stdout line is the plain summary:
+    println("BENCH_JSON:" + json)        // delimited, grep-able through sbt
+    System.err.println("BENCH_JSON:" + json) // stderr escapes sbt [info] wrap
+    // bench_result.json carries the per-query medians and the full spread
+    // (min/median/max over the interleaved runs) so regression triage can
+    // separate host drift (wide spread, overlapping ranges) from real
+    // change (shifted ranges).
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$Runs}"""
-    // Pickup paths, ordered so the LAST stdout line is the complete plain
-    // JSON (the tail-window parse sees it whole):
-    println("BENCH_JSON:" + json)        // delimited, grep-able through sbt
-    System.err.println("BENCH_JSON:" + json) // stderr escapes sbt [info] wrap
-    // bench_result.json carries the full per-query spread (min/median/max
-    // over the interleaved runs) so regression triage can separate host
-    // drift (wide spread, overlapping ranges) from real change (shifted
-    // ranges); the stdout contract line above stays medians-only/short.
     val spread = entries.map { case (name, _) =>
       val ok = timings.getOrElse(name, Nil).sorted
       val (mn, md, mx) =
@@ -164,7 +173,7 @@ object Bench {
     val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"spread":$spread,"remeasured":$rem,"sf":"$sfDir","runs":$Runs}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
       (fullJson + "\n").getBytes("UTF-8"))
-    println(json)                        // plain line, final (historical contract)
+    println(json)                        // plain line, final
     spark.stop()
   }
 }

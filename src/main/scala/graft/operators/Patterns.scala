@@ -25,7 +25,8 @@ import graft.graph.PropertyGraph
   */
 object Patterns {
 
-  private def trailNeq(r1: String, r2: String): Column =
+  /** r1 ≠ r2 as stored edges: the trail condition of a 2-edge pattern. */
+  private[graft] def trailNeq(r1: String, r2: String): Column =
     !(col(s"$r1.relType") === col(s"$r2.relType") &&
       col(s"$r1.src") === col(s"$r2.src") &&
       col(s"$r1.dst") === col(s"$r2.dst"))
@@ -34,64 +35,6 @@ object Patterns {
     * `MATCH (src:Label {name: ...})` with names from an UNWIND list. */
   def anchors(g: PropertyGraph, label: String, names: Seq[String]): DataFrame =
     g.nodes.where(col("label") === label && col("name").isin(names: _*))
-
-  /** Unlabeled anchors — the path-enumeration queries anchor by name only
-    * (`MATCH (src {name: srcName})`, path_retriever.py:5). */
-  def anchorsByName(g: PropertyGraph, names: Seq[String]): DataFrame =
-    g.nodes.where(col("name").isin(names: _*))
-
-  /** J2 over an arbitrary anchor frame; carries the anchor label so path
-    * candidates can be templated (create_query needs labels1). */
-  def oneHopFrom(g: PropertyGraph, anchorDf: DataFrame): DataFrame =
-    broadcast(anchorDf.as("s"))
-      .join(g.bidir.as("e"), col("s.nodeId") === col("e.a"))
-      .join(g.nodes.as("t"), col("e.b") === col("t.nodeId"))
-      .select(
-        col("s.label").as("src_label"), col("s.name").as("src_name"),
-        col("e.relType").as("rel_type"),
-        col("t.label").as("tgt_label"), col("t.nodeId").as("tgt_id"),
-        col("t.name").as("tgt_name"))
-
-  /** J3 over an arbitrary anchor frame, with mid-node columns exposed. */
-  def twoHopFrom(g: PropertyGraph, anchorDf: DataFrame): DataFrame =
-    broadcast(anchorDf.as("s"))
-      .join(g.bidir.as("e1"), col("s.nodeId") === col("e1.a"))
-      .join(g.bidir.as("e2"), col("e1.b") === col("e2.a"))
-      .join(g.nodes.as("m"), col("e1.b") === col("m.nodeId"))
-      .join(g.nodes.as("t"), col("e2.b") === col("t.nodeId"))
-      .where(col("t.nodeId") =!= col("s.nodeId") && trailNeq("e1", "e2"))
-      .select(
-        col("s.label").as("src_label"), col("s.name").as("src_name"),
-        col("e1.relType").as("rel1_type"),
-        col("m.label").as("mid_label"),
-        col("e2.relType").as("rel2_type"),
-        col("t.label").as("tgt_label"), col("t.nodeId").as("tgt_id"),
-        col("t.name").as("tgt_name"))
-
-  /** J4 over arbitrary anchor frames crossed by name (the double UNWIND U2),
-    * with both anchor labels exposed.
-    *
-    * Meet-in-the-middle join order: both endpoints are anchored (tiny), so
-    * EACH edge leg is filtered by its anchor before the two 1-hop frontiers
-    * meet on the middle node. The result is bounded by deg(s1)×deg(s2); the
-    * naive left-to-right order (frontier ⋈ full bidir, filter by s2 last)
-    * shuffles the whole edge table at 100× scale for the same answer. */
-  def twoPathFrom(g: PropertyGraph, anchorDf: DataFrame): DataFrame =
-    broadcast(anchorDf.as("s1"))
-      .join(g.bidir.as("e1"), col("s1.nodeId") === col("e1.a"))
-      .join(
-        g.bidir.as("e2")
-          .join(broadcast(anchorDf.as("s2")), col("e2.b") === col("s2.nodeId")),
-        col("e1.b") === col("e2.a"))
-      .where(col("s1.nodeId") =!= col("s2.nodeId") && trailNeq("e1", "e2"))
-      .join(g.nodes.as("m"), col("e1.b") === col("m.nodeId"))
-      .select(
-        col("s1.label").as("src1_label"), col("s1.name").as("src1_name"),
-        col("e1.relType").as("rel1_type"),
-        col("m.label").as("mid_label"), col("m.nodeId").as("mid_id"),
-        col("m.name").as("mid_name"),
-        col("e2.relType").as("rel2_type"),
-        col("s2.label").as("src2_label"), col("s2.name").as("src2_name"))
 
   /** J2 — 1-hop expand: `(src:Label {name IN names})-[r]-(tgt)`.
     * Returns src_name, rel_type, tgt_label, tgt_id, tgt_name. */
@@ -122,14 +65,19 @@ object Patterns {
   /** J4 — 2-path between two anchor sets:
     * `(src1 {n1})-[r1]-(mid)-[r2]-(src2 {n2}) WHERE src1 <> src2` + r1≠r2
     * (reference retrieval/path_retriever.py:10-13; anchors crossed like the
-    * double UNWIND U2). Returns the discovered middle nodes. */
+    * double UNWIND U2). Returns the discovered middle nodes.
+    *
+    * Meet-in-the-middle join order: both endpoints are anchored (tiny), so
+    * EACH edge leg is filtered by its anchor before the two 1-hop frontiers
+    * meet on the middle node. The result is bounded by deg(s1)×deg(s2); the
+    * naive left-to-right order (frontier ⋈ full bidir, filter by s2 last)
+    * shuffles the whole edge table at 100× scale for the same answer. */
   def twoPath(g: PropertyGraph, label1: String, names1: Seq[String],
               label2: String, names2: Seq[String]): DataFrame =
     broadcast(anchors(g, label1, names1).as("s1"))
       .join(g.bidir.as("e1"), col("s1.nodeId") === col("e1.a"))
       .join(
         // far leg filtered by its anchor BEFORE meeting on the mid node
-        // (see twoPathFrom: bounded by deg(s1)×deg(s2), no full-edge shuffle)
         g.bidir.as("e2")
           .join(broadcast(anchors(g, label2, names2).as("s2")),
             col("e2.b") === col("s2.nodeId")),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.operators.{Patterns, Retrieval, Vectors}
@@ -91,11 +91,15 @@ object GraphRaft {
   }
 
   /** The reference's own deterministic ranking heuristic: sort by
-    * (-hits, num_results) — prefer recall, then selectivity (llm1.py:53-58).
-    * Unsupervised candidates keep enumeration order after selectivity. */
+    * (-hits, num_results) — prefer recall, then selectivity (llm1.py:53-58)
+    * — then by the Cypher text. The reference breaks ties by Neo4j's record
+    * order; here enumeration order is the hash order of whatever Spark plan
+    * produced the candidates, so without the text tie-break the top k would
+    * move whenever that plan does. It is the order `bestLabelGate`,
+    * `sampleCandidates` and `Retrieval.bestCandidates` use as well. */
   object HeuristicRanker extends QueryRanker {
     def rank(candidates: Seq[Candidate], k: Int): Seq[Candidate] =
-      candidates.sortBy(c => (-c.hits.getOrElse(0L), c.numResults)).take(k)
+      candidates.sortBy(c => (-c.hits.getOrElse(0L), c.numResults, c.cypher)).take(k)
   }
 
   /** Identity answerer: the retrieved names, best-first (the retrieval-only
@@ -190,61 +194,33 @@ object GraphRaft {
 
   /** Enumerate candidate queries around the source names: 1-hop, 2-hop and
     * 2-path schema summaries with result counts, templated into concrete
-    * Cypher exactly like `create_query` (path_retriever.py:30-40). With
-    * `goldIds` the supervision count (A2) is added and becomes `hits`.
-    * The summaries are O(schema), tiny — collected to the driver like the
-    * reference collects records. */
+    * Cypher like `create_query` (path_retriever.py:30-40). This is the
+    * one-question view of [[TrainingData]]'s batched enumerators: the names
+    * become a one-row question frame, the requested patterns' candidates
+    * are unioned and filtered by `targetLabel` (the returned node's label:
+    * the target of a 1-hop or 2-hop, the middle of a 2-path), and ONE
+    * action collects them — O(schema) rows, like the reference collects
+    * records. With `goldIds` the supervision count (A2) becomes `hits`. */
   def enumerateCandidates(g: PropertyGraph, srcNames: Seq[String],
                           goldIds: Option[Seq[Long]] = None,
                           patterns: Seq[String] = Seq("1hop", "2hop", "2path"),
                           targetLabel: Option[String] = None): Seq[Candidate] = {
-    if (srcNames.isEmpty) return Nil
-    val anchorDf = Patterns.anchorsByName(g, srcNames)
-    def sup(tgtId: Column): Seq[Column] = goldIds match {
-      case Some(ids) => Seq(count_distinct(when(tgtId.isin(ids: _*), tgtId)).as("hits"))
-      case None => Nil
-    }
-    def cands(pattern: String): Seq[Candidate] = pattern match {
-      case "1hop" =>
-        val rows = Patterns.oneHopFrom(g, anchorDf)
-          .groupBy("src_label", "src_name", "rel_type", "tgt_label")
-          .agg(count_distinct(col("tgt_id")).as("total_cnt"),
-            sup(col("tgt_id")): _*)
-          .filter(targetLabel.map(l => col("tgt_label") === l).getOrElse(lit(true)))
-          .collect()
-        rows.toSeq.map { r =>
-          Candidate(
-            s"""MATCH (x1:${r.getAs[String]("src_label")} {name: "${r.getAs[String]("src_name")}"})-[r1:${r.getAs[String]("rel_type")}]-(x2:${r.getAs[String]("tgt_label")}) RETURN DISTINCT x2.name AS name""",
-            goldIds.map(_ => r.getAs[Long]("hits")), r.getAs[Long]("total_cnt"))
-        }
-      case "2hop" =>
-        val rows = Patterns.twoHopFrom(g, anchorDf)
-          .groupBy("src_label", "src_name", "rel1_type", "mid_label", "rel2_type", "tgt_label")
-          .agg(count_distinct(col("tgt_id")).as("total_cnt"),
-            sup(col("tgt_id")): _*)
-          .filter(targetLabel.map(l => col("tgt_label") === l).getOrElse(lit(true)))
-          .collect()
-        rows.toSeq.map { r =>
-          Candidate(
-            s"""MATCH (x1:${r.getAs[String]("src_label")} {name: "${r.getAs[String]("src_name")}"})-[r1:${r.getAs[String]("rel1_type")}]-(x2:${r.getAs[String]("mid_label")})-[r2:${r.getAs[String]("rel2_type")}]-(x3:${r.getAs[String]("tgt_label")}) RETURN DISTINCT x3.name AS name""",
-            goldIds.map(_ => r.getAs[Long]("hits")), r.getAs[Long]("total_cnt"))
-        }
-      case "2path" =>
-        val rows = Patterns.twoPathFrom(g, anchorDf)
-          .groupBy("src1_label", "src1_name", "rel1_type", "mid_label",
-            "rel2_type", "src2_label", "src2_name")
-          .agg(count_distinct(col("mid_id")).as("total_cnt"),
-            sup(col("mid_id")): _*)
-          .filter(targetLabel.map(l => col("mid_label") === l).getOrElse(lit(true)))
-          .collect()
-        rows.toSeq.map { r =>
-          Candidate(
-            s"""MATCH (x1:${r.getAs[String]("src1_label")} {name: "${r.getAs[String]("src1_name")}"})-[r1:${r.getAs[String]("rel1_type")}]-(x2:${r.getAs[String]("mid_label")})-[r2:${r.getAs[String]("rel2_type")}]-(x3:${r.getAs[String]("src2_label")} {name: "${r.getAs[String]("src2_name")}"}) RETURN DISTINCT x2.name AS name""",
-            goldIds.map(_ => r.getAs[Long]("hits")), r.getAs[Long]("total_cnt"))
-        }
+    if (srcNames.isEmpty || patterns.isEmpty) return Nil
+    val spark = g.nodes.sparkSession
+    import spark.implicits._
+    val qa = Seq((0L, srcNames, goldIds.getOrElse(Seq.empty[Long])))
+      .toDF("id", "entities", "answer_ids")
+    val all = patterns.map {
+      case "1hop" => TrainingData.oneHopCandidates(g, qa) -> "tgt_label"
+      case "2hop" => TrainingData.twoHopCandidates(g, qa) -> "tgt_label"
+      case "2path" => TrainingData.twoPathCandidates(g, qa) -> "mid_label"
       case other => throw new IllegalArgumentException(s"unknown pattern $other")
-    }
-    patterns.flatMap(cands)
+    }.map { case (df, label) =>
+      df.select(col("cypher_query"), col("hits"), col("num_results"),
+        col(label).as("target_label"))
+    }.reduce(_.unionByName(_))
+    targetLabel.fold(all)(l => all.where(col("target_label") === l)).collect().toSeq
+      .map(r => Candidate(r.getString(0), goldIds.map(_ => r.getLong(1)), r.getLong(2)))
   }
 
   // ---- budgeted retrieval (retriever.py:63-109) ----

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
+import graft.operators.{Patterns, Retrieval}
 
 /** LLM1 training-data generation (SURVEY §3.2; reference
   * training/generate_training_data_llm1.ipynb cells 3-4 + llm1.py:166-180)
@@ -28,95 +29,100 @@ object TrainingData {
     * Returns one row per (question, 1-hop path schema): the templated
     * candidate + num_results + hits. */
   def oneHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
-    val anchors = qa
-      .select(col("id"), explode(col("entities")).as("name"), col("answer_ids"))
-      .join(g.nodes.select(col("nodeId").as("src_id"), col("label").as("src_label"),
-        col("name")), Seq("name"))
-    val hops = anchors
+    val hops = anchors(g, qa)
       .join(g.bidir.as("e"), col("src_id") === col("e.a"))
-      .join(g.nodes.select(col("nodeId").as("tgt_id"), col("label").as("tgt_label")),
-        col("e.b") === col("tgt_id"))
-    hops
-      .groupBy(col("id"), col("src_label"), col("name").as("src_name"),
-        col("relType").as("rel_type"), col("tgt_label"))
-      .agg(
-        count_distinct(col("tgt_id")).as("num_results"),
-        count_distinct(when(array_contains(col("answer_ids"), col("tgt_id")),
-          col("tgt_id"))).as("hits"))
-      .withColumn("cypher_query", concat(
-        lit("MATCH (x1:"), col("src_label"), lit(" {name: \""), col("src_name"),
-        lit("\"})-[r1:"), col("rel_type"), lit("]-(x2:"), col("tgt_label"),
-        lit(") RETURN DISTINCT x2.name AS name")))
+      .join(labeled(g, "tgt"), col("e.b") === col("tgt_id"))
+      .withColumn("rel_type", col("e.relType"))
+    summarize(hops, "tgt_id", Seq("src_label" -> Some("src_name"), "tgt_label" -> None),
+      Seq("rel_type"), returned = 2)
   }
 
   /** 2-hop variant of [[oneHopCandidates]] — same single-job shape with one
     * more edge join and full trail semantics (r1 ≠ r2 on the stored-edge
     * identity triple, tgt ≠ src). */
   def twoHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
-    val anchors = qa
-      .select(col("id"), explode(col("entities")).as("name"), col("answer_ids"))
-      .join(g.nodes.select(col("nodeId").as("src_id"), col("label").as("src_label"),
-        col("name")), Seq("name"))
-    val hops = anchors
+    val hops = anchors(g, qa)
       .join(g.bidir.as("e1"), col("src_id") === col("e1.a"))
-      .join(g.nodes.select(col("nodeId").as("mid_id"), col("label").as("mid_label")),
-        col("e1.b") === col("mid_id"))
+      .join(labeled(g, "mid"), col("e1.b") === col("mid_id"))
       .join(g.bidir.as("e2"), col("mid_id") === col("e2.a"))
-      .join(g.nodes.select(col("nodeId").as("tgt_id"), col("label").as("tgt_label")),
-        col("e2.b") === col("tgt_id"))
-      .where(col("tgt_id") =!= col("src_id") &&
-        !(col("e1.relType") === col("e2.relType") &&
-          col("e1.src") === col("e2.src") && col("e1.dst") === col("e2.dst")))
-    hops
-      .groupBy(col("id"), col("src_label"), col("name").as("src_name"),
-        col("e1.relType").as("rel1_type"), col("mid_label"),
-        col("e2.relType").as("rel2_type"), col("tgt_label"))
-      .agg(
-        count_distinct(col("tgt_id")).as("num_results"),
-        count_distinct(when(array_contains(col("answer_ids"), col("tgt_id")),
-          col("tgt_id"))).as("hits"))
-      .withColumn("cypher_query", concat(
-        lit("MATCH (x1:"), col("src_label"), lit(" {name: \""), col("src_name"),
-        lit("\"})-[r1:"), col("rel1_type"), lit("]-(x2:"), col("mid_label"),
-        lit(")-[r2:"), col("rel2_type"), lit("]-(x3:"), col("tgt_label"),
-        lit(") RETURN DISTINCT x3.name AS name")))
+      .join(labeled(g, "tgt"), col("e2.b") === col("tgt_id"))
+      .where(col("tgt_id") =!= col("src_id") && Patterns.trailNeq("e1", "e2"))
+      .withColumn("rel1_type", col("e1.relType"))
+      .withColumn("rel2_type", col("e2.relType"))
+    summarize(hops, "tgt_id",
+      Seq("src_label" -> Some("src_name"), "mid_label" -> None, "tgt_label" -> None),
+      Seq("rel1_type", "rel2_type"), returned = 3)
   }
 
   /** 2-path variant: both endpoints anchored in the question's entity set
     * (the double-UNWIND cross product U2), middle node counted — one job
-    * for every question at once, trail semantics included. */
+    * for every question at once, trail semantics included. The far anchor
+    * joins last, on (node, question id): keyed by question, this order ran
+    * faster on the training-set batch than the meet-in-the-middle order of
+    * [[graft.operators.Patterns.twoPath]]. */
   def twoPathCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
-    val anchors = qa
-      .select(col("id"), explode(col("entities")).as("name"), col("answer_ids"))
-      .join(g.nodes.select(col("nodeId").as("a_id"), col("label").as("a_label"),
-        col("name")), Seq("name"))
-    val left = anchors.select(col("id"), col("answer_ids"),
-      col("a_id").as("src1_id"), col("a_label").as("src1_label"), col("name").as("src1_name"))
-    val right = anchors.select(col("id").as("id2"),
-      col("a_id").as("src2_id"), col("a_label").as("src2_label"), col("name").as("src2_name"))
+    val near = anchors(g, qa)
+    val left = near.select(col("id"), col("answer_ids"),
+      col("src_id").as("src1_id"), col("src_label").as("src1_label"),
+      col("src_name").as("src1_name"))
+    val right = near.select(col("id").as("id2"),
+      col("src_id").as("src2_id"), col("src_label").as("src2_label"),
+      col("src_name").as("src2_name"))
     val hops = left
       .join(g.bidir.as("e1"), col("src1_id") === col("e1.a"))
-      .join(g.nodes.select(col("nodeId").as("mid_id"), col("label").as("mid_label")),
-        col("e1.b") === col("mid_id"))
+      .join(labeled(g, "mid"), col("e1.b") === col("mid_id"))
       .join(g.bidir.as("e2"), col("mid_id") === col("e2.a"))
       .join(right, col("e2.b") === col("src2_id") && col("id") === col("id2"))
-      .where(col("src1_id") =!= col("src2_id") &&
-        !(col("e1.relType") === col("e2.relType") &&
-          col("e1.src") === col("e2.src") && col("e1.dst") === col("e2.dst")))
+      .where(col("src1_id") =!= col("src2_id") && Patterns.trailNeq("e1", "e2"))
+      .withColumn("rel1_type", col("e1.relType"))
+      .withColumn("rel2_type", col("e2.relType"))
+    summarize(hops, "mid_id",
+      Seq("src1_label" -> Some("src1_name"), "mid_label" -> None,
+        "src2_label" -> Some("src2_name")),
+      Seq("rel1_type", "rel2_type"), returned = 2)
+  }
+
+  /** The anchor prelude every enumerator shares: one row per (question,
+    * entity, node named by it) — (id, answer_ids, src_id, src_label,
+    * src_name). Path enumeration anchors by name only (`MATCH (src {name:
+    * srcName})`, path_retriever.py:5). */
+  private def anchors(g: PropertyGraph, qa: DataFrame): DataFrame =
+    qa.select(col("id"), explode(col("entities")).as("name"), col("answer_ids"))
+      .join(g.nodes.select(col("nodeId").as("src_id"), col("label").as("src_label"),
+        col("name")), Seq("name"))
+      .withColumnRenamed("name", "src_name")
+
+  /** (`p`_id, `p`_label) of every node, for a hop's far end. */
+  private def labeled(g: PropertyGraph, p: String): DataFrame =
+    g.nodes.select(col("nodeId").as(s"${p}_id"), col("label").as(s"${p}_label"))
+
+  /** The shared summarize step (path_retriever.py:49-64): group the hops by
+    * question and path schema, count distinct `target` nodes as
+    * `num_results` and the gold ones among them as `hits`, and fill in the
+    * `create_query` template (path_retriever.py:30-40). The schema is the
+    * path itself: `nodes` are (label column, anchor-name column) in path
+    * order, `rels` the relationship-type columns between them, `returned`
+    * the 1-based position of the node the query returns. */
+  private def summarize(hops: DataFrame, target: String,
+                        nodes: Seq[(String, Option[String])], rels: Seq[String],
+                        returned: Int): DataFrame = {
+    val keys = nodes.zipWithIndex.flatMap { case ((label, name), i) =>
+      (label +: name.toSeq) ++ rels.lift(i)
+    }
+    val template = nodes.zipWithIndex.flatMap { case ((label, name), i) =>
+      Seq(lit(s"(x${i + 1}:"), col(label)) ++
+        name.toSeq.flatMap(n => Seq(lit(" {name: \""), col(n), lit("\"}"))) ++
+        Seq(lit(")")) ++
+        rels.lift(i).toSeq.flatMap(r => Seq(lit(s"-[r${i + 1}:"), col(r), lit("]-")))
+    }
     hops
-      .groupBy(col("id"), col("src1_label"), col("src1_name"),
-        col("e1.relType").as("rel1_type"), col("mid_label"),
-        col("e2.relType").as("rel2_type"), col("src2_label"), col("src2_name"))
+      .groupBy((col("id") +: keys.map(col)): _*)
       .agg(
-        count_distinct(col("mid_id")).as("num_results"),
-        count_distinct(when(array_contains(col("answer_ids"), col("mid_id")),
-          col("mid_id"))).as("hits"))
-      .withColumn("cypher_query", concat(
-        lit("MATCH (x1:"), col("src1_label"), lit(" {name: \""), col("src1_name"),
-        lit("\"})-[r1:"), col("rel1_type"), lit("]-(x2:"), col("mid_label"),
-        lit(")-[r2:"), col("rel2_type"), lit("]-(x3:"), col("src2_label"),
-        lit(" {name: \""), col("src2_name"),
-        lit("\"}) RETURN DISTINCT x2.name AS name")))
+        count_distinct(col(target)).as("num_results"),
+        count_distinct(when(array_contains(col("answer_ids"), col(target)),
+          col(target))).as("hits"))
+      .withColumn("cypher_query", concat((lit("MATCH ") +: template :+
+        lit(s" RETURN DISTINCT x$returned.name AS name")): _*))
   }
 
   /** T4 rank-biased candidate sampling, distributed (SURVEY §2.7;
@@ -124,14 +130,14 @@ object TrainingData {
     * candidates by (-hits, num_results) and draw `nSamples` DISTINCT indices
     * from the power-law inv_cdf = u^(1/α) — without replacement, like the
     * reference's `if rank not in samples` rejection loop, deterministically
-    * unrolled in [[graft.operators.Retrieval.powerLawSampleIdx]]. */
+    * unrolled in [[Retrieval.powerLawSampleIdx]]. */
   def sampleCandidates(candidates: DataFrame, nSamples: Int,
                        invAlpha: Int = 10, attempts: Int = 128): DataFrame = {
     val w = Window.partitionBy(col("id"))
       .orderBy(col("hits").desc, col("num_results"), col("cypher_query"))
     val ranked = candidates.withColumn("rk", row_number().over(w))
     val counts = candidates.groupBy("id").agg(count(lit(1)).as("n"))
-    val draws = graft.operators.Retrieval.powerLawSampleIdx(
+    val draws = Retrieval.powerLawSampleIdx(
       counts, "id", "n", nSamples, invAlpha, attempts)
     draws.join(ranked, draws("id") === ranked("id") &&
         ranked("rk") === draws("idx") + 1)
@@ -174,21 +180,13 @@ object TrainingData {
   }
 
   /** The llm1 training-label pipeline (llm1.py:53-66,169-177): per question
-    * rank candidates by (-hits, num_results), keep the best, gate on
-    * recall ≥ minRecall against the gold set and precision ≥ minPrecision,
-    * then take the first `limitFraction` of questions (P8 prefix filter). */
+    * keep the best candidate by (-hits, num_results, cypher_query) and gate
+    * it on recall ≥ minRecall against the gold set and precision ≥
+    * minPrecision — [[Retrieval.bestCandidates]] grouped by question. */
   def bestLabelGate(candidates: DataFrame, qa: DataFrame,
-                    minRecall: Double = 1.0, minPrecision: Double = 0.1): DataFrame = {
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("hits").desc, col("num_results"), col("cypher_query"))
-    val gold = qa.select(col("id"), size(col("answer_ids")).cast("long").as("gold_total"))
-    candidates
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .drop("rn")
-      .join(gold, "id")
-      .where(
-        col("hits").cast("double") / nullif(col("gold_total").cast("double"), lit(0.0)) >= minRecall &&
-        col("hits").cast("double") / nullif(col("num_results").cast("double"), lit(0.0)) >= minPrecision)
-  }
+                    minRecall: Double = 1.0, minPrecision: Double = 0.1): DataFrame =
+    Retrieval.bestCandidates(
+      candidates.join(qa.select(col("id"),
+        size(col("answer_ids")).cast("long").as("gold_total")), "id"),
+      "id", "cypher_query", minRecall, minPrecision)
 }

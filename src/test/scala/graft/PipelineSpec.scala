@@ -77,6 +77,50 @@ class PipelineSpec extends SparkSpec {
     assert(twohop.hits === Some(2L))
     // every candidate parses under the grammar
     cands.foreach(c => Parser.parse(c.cypher))
+
+    // inference mode: the same candidates, none supervised
+    val unsupervised = GraphRaft.enumerateCandidates(g, Seq("MIT"),
+      patterns = Seq("1hop", "2hop"))
+    assert(unsupervised.forall(_.hits.isEmpty))
+    assert(unsupervised.map(c => (c.cypher, c.numResults)).toSet ===
+      cands.map(c => (c.cypher, c.numResults)).toSet)
+
+    // a 2-path's targetLabel is its middle node's label, not an anchor's
+    val viaInstitution = GraphRaft.enumerateCandidates(g, Seq("Alice", "Bob"),
+      patterns = Seq("2path"), targetLabel = Some("Institution"))
+    assert(viaInstitution.map(_.cypher).toSet === Set(
+      """MATCH (x1:Author {name: "Alice"})-[r1:AFFILIATED_WITH]-(x2:Institution)-[r2:AFFILIATED_WITH]-(x3:Author {name: "Bob"}) RETURN DISTINCT x2.name AS name""",
+      """MATCH (x1:Author {name: "Bob"})-[r1:AFFILIATED_WITH]-(x2:Institution)-[r2:AFFILIATED_WITH]-(x3:Author {name: "Alice"}) RETURN DISTINCT x2.name AS name"""))
+    assert(viaInstitution.forall(_.numResults == 1L))
+    assert(GraphRaft.enumerateCandidates(g, Seq("Alice", "Bob"),
+      patterns = Seq("2path"), targetLabel = Some("Author")).isEmpty)
+
+    intercept[IllegalArgumentException] {
+      GraphRaft.enumerateCandidates(g, Seq("MIT"), patterns = Seq("3hop"))
+    }
+  }
+
+  test("candidate enumeration over all three patterns starts one SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val starts = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val cands = try {
+      val cs = GraphRaft.enumerateCandidates(g, Seq("Alice", "Bob"),
+        goldIds = Some(Seq(20L)))
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+      cs
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // every pattern contributed a candidate, all from the one collect
+    Seq("]-(x2:Institution) RETURN", "]-(x3:Paper) RETURN", "(x3:Author {name: ")
+      .foreach(p => assert(cands.exists(_.cypher.contains(p)), p))
+    assert(starts.get === 1)
   }
 
   test("heuristic ranker: (-hits, num_results) like llm1.py:53-58") {
@@ -85,6 +129,12 @@ class PipelineSpec extends SparkSpec {
       GraphRaft.Candidate("b", Some(2L), 50L),
       GraphRaft.Candidate("c", Some(2L), 5L)), 2)
     assert(ranked.map(_.cypher) === Seq("c", "b"))
+    // equal (hits, num_results): the Cypher text decides, not input order
+    val tied = GraphRaft.HeuristicRanker.rank(Seq(
+      GraphRaft.Candidate("z", Some(1L), 3L),
+      GraphRaft.Candidate("y", Some(1L), 3L),
+      GraphRaft.Candidate("x", Some(0L), 1L)), 2)
+    assert(tied.map(_.cypher) === Seq("y", "z"))
   }
 
   test("retrieveData: budgeted assembly + KNN backfill with exclusion") {

@@ -39,7 +39,7 @@ class TrainingDataSpec extends SparkSpec {
   test("2-hop candidates agree with the pipeline's per-question enumeration") {
     val cands = TrainingData.twoHopCandidates(g, qa)
       .where(col("id") === 2L).collect()
-    // cross-check against the driver-side enumeration for MIT, gold {10,11}
+    // the one-question view maps this batch's rows for MIT, gold {10,11}
     val expected = graft.pipeline.GraphRaft.enumerateCandidates(
       g, Seq("MIT"), goldIds = Some(Seq(10L, 11L)), patterns = Seq("2hop"))
       .map(c => (c.cypher, c.hits.get, c.numResults)).toSet
