@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one measurement harness: the LOAD stage, the timing protocol, the
+  * per-query block release and the final-plan dump. `Bench.main` times the
+  * catalog with them; [[TimeQ]] (a named subset) and [[Verify]] (the
+  * correctness dump) call the same functions. */
 object Bench {
   /** Timing passes per query; the reported per-query number is the median,
     * the total is the sum of medians. Single-run timings on local[32] vary
@@ -7,6 +12,8 @@ object Bench {
     * variance), so medians are the only way round-over-round comparisons
     * mean anything. */
   val Runs = 3
+
+  type Entry = (SparkSession, String) => DataFrame
 
   private def r3(v: Double): String =
     BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
@@ -25,83 +32,86 @@ object Bench {
       s""""failed":$failed,"cpus":$cpus,"sf":"$sf","runs":$runs}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The graph half of the LOAD stage; returns the persisted-RDD snapshot
+    * after it. Graph construction is LOAD (the reference pre-loads +
+    * indexes Neo4j offline, stark_neo4j_loading.py): queries are timed
+    * against a loaded graph, not charged its one-time build. */
+  def loadGraph(spark: SparkSession, sfDir: String): Set[Int] = {
+    val g = graft.graph.TpchGraph(spark, sfDir)
+    g.nodes.count(); g.rels.count()
+    // The shared deduplicated adjacency every iterative algorithm consumes
+    // is LOAD too (a graph store keeps it materialized on disk); warming it
+    // here lands its cache in the snapshot so per-query release never
+    // drops it.
+    g.adjPairs.count(); g.bidirTriples.count(); g.nodeCount
+    // GraphX materialization (rdd conversion + caching); without this the
+    // first GraphX query absorbs ~20 s of one-time graph-build cost that
+    // the reference pays at Neo4j load time.
+    graft.graph.GraphXBridge.materialize(spark, g)
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
+
+  /** The whole LOAD stage: JIT warm-up, [[loadGraph]], then the write-once
+    * layouts. Returns the persisted-RDD snapshot that [[release]] keeps:
+    * LOAD caches stay persisted for the whole run, and any RDD persisted
+    * after it is a per-query block. */
+  def load(spark: SparkSession, sfDir: String): Set[Int] = {
     // JVM/codegen warmup outside the timed region: the first query otherwise
     // absorbs several seconds of one-time JIT + parquet-footer + codegen
     // infrastructure cost that belongs to the session, not the query.
     spark.range(1000).selectExpr("md5(cast(id as string)) m")
       .groupBy("m").count().count()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    // Materialize the property graph before timing: graph construction is
-    // the LOAD stage (the reference pre-loads + indexes Neo4j offline,
-    // stark_neo4j_loading.py); queries should be timed against a loaded
-    // graph, not charged its one-time build.
-    val g = graft.graph.TpchGraph(spark, sfDir)
-    g.nodes.count(); g.rels.count()
-    // The shared deduplicated adjacency every iterative algorithm consumes
-    // is LOAD too (a graph store keeps it materialized on disk); warming it
-    // here lands its cache in the load snapshot below so per-query cleanup
-    // never drops it.
-    g.adjPairs.count(); g.bidirTriples.count(); g.nodeCount
-    // GraphX materialization is part of the LOAD stage too (rdd conversion +
-    // caching); without this the first GraphX query absorbs ~20 s of one-time
-    // graph-build cost that the reference pays at Neo4j load time.
-    graft.graph.GraphXBridge.materialize(spark, g)
-    // Bucketed-layout write is LOAD as well (the write-once 100 TB layout);
-    // the bucketed query is then timed against the layout, not its creation.
+    loadGraph(spark, sfDir)
+    // The write-once layouts are LOAD as well (the 100 TB layouts are
+    // written once); queries are timed against them, not their creation:
+    // bucketed, z-order clustered, Hive-partitioned events, WebDataset tar
+    // shards, the IVF-partitioned vector store and the bucket-partitioned
+    // inverted index.
     Queries.warmBucketed(spark, sfDir)
-    // Same for the z-order clustered rewrite.
     Queries.warmZorder(spark, sfDir)
-    // Hive-partitioned events copy is LOAD too (same write-once contract).
     Queries.warmPartitioned(spark, sfDir)
-    // WebDataset tar-shard layout: write-once, queries timed against it.
     Queries.warmTar(spark, sfDir)
-    // IVF-partitioned vector store: write-once ANN layout.
     Queries.warmIvfStore(spark, sfDir)
-    // Bucket-partitioned inverted-index layout: write-once, probes pruned.
     Queries.warmSearchStore(spark, sfDir)
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+  }
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 name: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return None
-      }
-      Some((System.nanoTime() - t0) / 1e9)
+  /** Unpersist every RDD outside the `load` snapshot: a query's
+    * localCheckpoint blocks. Freeing them when the query's action has
+    * finished keeps a long catalog JVM's memory flat — the round-6
+    * 12.8–62 s graph_link_pred spread was this checkpoint debt piling onto
+    * later passes, not the query itself. BLOCKING: with blocking=false the
+    * block removal overlaps the NEXT query's timed region — exactly the
+    * cross-query debt the interleaved tails showed (the iterative graph
+    * family, many checkpoints each, had the worst max/min spreads). */
+  def release(spark: SparkSession, load: Set[Int]): Unit =
+    for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
+         if !load.contains(id)) rdd.unpersist(blocking = true)
+
+  /** What [[time]] measured: each entry's successful-run seconds, its
+    * failed-run count, and the entries that got an outlier confirmation. */
+  final case class Timings(runs: Map[String, List[Double]],
+                           failures: Map[String, Int],
+                           remeasured: Seq[String]) {
+    /** Median of the SUCCESSFUL runs; -1 when none succeeded — a -1
+      * sentinel must neither become the median (masking a flaky failure)
+      * nor SUBTRACT from a total (a broken query making the bench faster). */
+    def median(name: String): Double = {
+      val ok = runs.getOrElse(name, Nil).sorted
+      if (ok.isEmpty) -1.0 else ok(ok.length / 2)
     }
-    // INTERLEAVED runs (A,B,C,…,A,B,C,… — not A,A,A,B,B,B): a host-load
-    // window now lands on one pass of EVERY query instead of all three runs
-    // of whichever query it happened to cover, so cross-run drift shows up
-    // as per-query spread (min/max below) rather than a biased median —
-    // same-code drift on this box reaches 2× per query.
-    // SPARK_GRAFT_QUICK=1 → the §2-critical tier only (the inner dev
-    // loop's ~2-minute pass); the full catalog is the round-close run
-    val entries =
-      if (sys.env.get("SPARK_GRAFT_QUICK").exists(v => v == "1" || v == "true"))
-        SparkEntry.queries.filter { case (n, _) => Queries.quick(n) }.toSeq
-      else SparkEntry.queries.toSeq
+  }
+
+  /** The timing protocol: `runs` interleaved passes of `count()` over
+    * `entries`, each run after a quiesce and followed by [[release]]. A
+    * failed run is counted, never timed: its elapsed time measures the
+    * failure, not the query. */
+  def time(spark: SparkSession, sfDir: String, entries: Seq[(String, Entry)],
+           runs: Int, load: Set[Int]): Timings = {
     val timings = collection.mutable.Map[String, List[Double]]()
-    // LOAD-stage caches (graph, GraphX, layouts) stay persisted for the
-    // whole run; any RDD persisted AFTER this snapshot is a per-query
-    // localCheckpoint block. Freeing those when the query's action has
-    // finished keeps the 138-query JVM's memory flat — the round-6
-    // 12.8–62 s graph_link_pred spread was this checkpoint debt piling
-    // onto later passes, not the query itself.
-    val loadRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    // BLOCKING unpersist: with blocking=false the block-removal work of a
-    // query's localCheckpoints overlaps the NEXT query's timed region —
-    // exactly the cross-query debt the interleaved tails showed (the
-    // iterative graph family, many checkpoints each, had the worst
-    // max/min spreads)
-    def dropQueryRdds(): Unit =
-      for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
-           if !loadRdds.contains(id)) rdd.unpersist(blocking = true)
-    def quiesce(): Unit = {
+    val failures = collection.mutable.Map[String, Int]().withDefaultValue(0)
+    def timeOnce(name: String, fn: Entry): Option[Double] = {
       // drain accumulated garbage BEFORE each timing so one query's
       // allocation debt doesn't land in the next query's number; the GC
       // also enqueues dead broadcast/shuffle weak refs, which Spark's
@@ -109,13 +119,23 @@ object Bench {
       // that drain instead of running inside the next timed region
       System.gc()
       Thread.sleep(150)
+      val t0 = System.nanoTime()
+      val t = try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failures(name) += 1
+        None
+      }
+      release(spark, load)
+      t
     }
-    for (_ <- 1 to Runs; (name, fn) <- entries) {
-      quiesce()
-      timeOnce(fn, name).foreach(t =>
-        timings(name) = t :: timings.getOrElse(name, Nil))
-      dropQueryRdds()
-    }
+    // INTERLEAVED runs (A,B,C,…,A,B,C,… — not A,A,A,B,B,B): a host-load
+    // window now lands on one pass of EVERY query instead of all three runs
+    // of whichever query it happened to cover, so cross-run drift shows up
+    // as per-query spread (min/max) rather than a biased median — same-code
+    // drift on this box reaches 2× per query.
+    for (_ <- 1 to runs; (name, fn) <- entries)
+      timeOnce(name, fn).foreach(t => timings(name) = t :: timings.getOrElse(name, Nil))
     // OUTLIER CONFIRMATION pass: interleaving deliberately exposes each
     // host-noise window to single passes of many queries, so a genuine
     // noise spike shows up as one outlier run. Any query whose max
@@ -124,14 +144,12 @@ object Bench {
     // re-run reproduces the slow number the spread is REAL and stands;
     // if it comes back fast, the outlier is attributed to the noise
     // window and replaced by the confirmation measurement. At most one
-    // replacement per query; every re-measured name is recorded in
-    // bench_result.json ("remeasured") for transparency.
+    // replacement per query; every re-measured name is recorded.
     val remeasured = collection.mutable.ArrayBuffer[String]()
     for ((name, fn) <- entries) {
       val ts = timings.getOrElse(name, Nil)
-      if (ts.length == Runs && ts.max > 2 * ts.min) {
-        quiesce()
-        timeOnce(fn, name).foreach { fresh =>
+      if (ts.length == runs && ts.max > 2 * ts.min)
+        timeOnce(name, fn).foreach { fresh =>
           remeasured += name
           // replace ONLY when the confirmation run actually refutes the
           // spread (fresh itself under the 2× flag line) — a re-run that
@@ -140,17 +158,36 @@ object Bench {
           if (fresh <= 2 * ts.min)
             timings(name) = ts.updated(ts.indexOf(ts.max), fresh)
         }
-        dropQueryRdds()
-      }
     }
-    val results = entries.map { case (name, _) =>
-      val ok = timings.getOrElse(name, Nil).sorted
-      // median of the SUCCESSFUL runs; a query with no successful run is
-      // reported as -1 and excluded from the total — a -1 sentinel must
-      // neither become the median (masking a flaky failure) nor SUBTRACT
-      // from the total (a broken query making the bench faster)
-      name -> (if (ok.isEmpty) -1.0 else ok(ok.length / 2))
-    }.toMap
+    Timings(timings.toMap, failures.toMap, remeasured.toSeq)
+  }
+
+  /** Execute `df` with the plan `count()` runs (`groupBy().count()`) and
+    * return that plan's formatted POST-execution adaptive form — the only
+    * place AQE runtime artifacts (ReusedExchange / reused
+    * ShuffleQueryStage ids, runtime join switches) are visible; `explain`
+    * before execution shows isFinalPlan=false without them. */
+  def finalPlan(df: DataFrame): String = {
+    val counted = df.groupBy().count()
+    counted.collect()
+    counted.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val loaded = load(spark, sfDir)
+    // SPARK_GRAFT_QUICK=1 → the §2-critical tier only (the inner dev
+    // loop's ~2-minute pass); the full catalog is the round-close run
+    val entries =
+      if (sys.env.get("SPARK_GRAFT_QUICK").exists(v => v == "1" || v == "true"))
+        SparkEntry.queries.filter { case (n, _) => Queries.quick(n) }.toSeq
+      else SparkEntry.queries.toSeq
+    val timings = time(spark, sfDir, entries, Runs, loaded)
+    val results = entries.map { case (name, _) => name -> timings.median(name) }.toMap
     val json = summary(results, cpus.toInt, sfDir, Runs)
     // Pickup paths, ordered so the LAST stdout line is the plain summary:
     println("BENCH_JSON:" + json)        // delimited, grep-able through sbt
@@ -163,13 +200,11 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     val spread = entries.map { case (name, _) =>
-      val ok = timings.getOrElse(name, Nil).sorted
-      val (mn, md, mx) =
-        if (ok.isEmpty) (-1.0, -1.0, -1.0)
-        else (ok.head, ok(ok.length / 2), ok.last)
-      s"\"$name\":{\"min\":${r3(mn)},\"median\":${r3(md)},\"max\":${r3(mx)}}"
+      val ok = timings.runs.getOrElse(name, Nil).sorted
+      val (mn, mx) = if (ok.isEmpty) (-1.0, -1.0) else (ok.head, ok.last)
+      s"\"$name\":{\"min\":${r3(mn)},\"median\":${r3(timings.median(name))},\"max\":${r3(mx)}}"
     }.mkString("{", ",", "}")
-    val rem = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val rem = timings.remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"spread":$spread,"remeasured":$rem,"sf":"$sfDir","runs":$Runs}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
       (fullJson + "\n").getBytes("UTF-8"))

@@ -303,11 +303,13 @@ object Queries {
     * fractions are hash-comparable. */
   def annRecallReport(spark: SparkSession, dir: String): DataFrame = {
     // ONE embeddings scan feeds the brute-force reference and all six ANN
-    // pipelines (r17, guide §2.4): the lazy local checkpoint leafs the
-    // scan into a single shared RDD, where each method used to re-plan its
-    // own parquet read (and the kmeans/codebook trainers re-planned it
-    // again inside). Methods go through the shared *On parameterizations,
-    // so the report stays row-identical to the standalone entries.
+    // pipelines (r17, guide §2.4): the local checkpoint leafs the scan
+    // into a single shared RDD, where each method used to re-plan its own
+    // parquet read (and the kmeans/codebook trainers re-planned it again
+    // inside). The checkpoint is released by the caller (in the harnesses,
+    // `Bench.release`). Methods go through the shared *On
+    // parameterizations, so the report stays row-identical to the
+    // standalone entries.
     val emb = T(spark, dir, "embeddings").localCheckpoint(false)
     val qv = queryVec(spark, dir)
     val bf = Vectors.bruteForceTopK(emb, "vec_id",

@@ -1,15 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev-loop timing harness (round-16 optimization work): times a NAMED
-  * subset of the catalog with the exact Bench methodology (same LOAD-stage
-  * warmup, same count() action, same per-query RDD cleanup + quiesce,
-  * interleaved runs, median reported) so a before/after on one query does
-  * not cost a full 334-entry pass. Optionally dumps each query's
-  * `.explain("formatted")` to a directory.
+/** Dev-loop timing harness: times a NAMED subset of the catalog with
+  * Bench's own functions ([[Bench.load]], [[Bench.time]]: same LOAD stage,
+  * count() action, release + quiesce, interleaved runs, outlier
+  * confirmation, median reported) so a before/after on one query does not
+  * cost a full 334-entry pass. Optionally writes each query's
+  * post-execution AQE plan ([[Bench.finalPlan]], untimed) to a directory.
   *
   * Usage: runMain graft.TimeQ <runs> <name>[,<name>…] [planOutDir]
-  * Bench itself is untouched — this is tooling, not the driver contract.
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
@@ -20,56 +18,24 @@ object TimeQ {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("md5(cast(id as string)) m")
-      .groupBy("m").count().count()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    val g = graft.graph.TpchGraph(spark, sfDir)
-    g.nodes.count(); g.rels.count()
-    g.adjPairs.count(); g.bidirTriples.count(); g.nodeCount
-    graft.graph.GraphXBridge.materialize(spark, g)
-    Queries.warmBucketed(spark, sfDir)
-    Queries.warmZorder(spark, sfDir)
-    Queries.warmPartitioned(spark, sfDir)
-    Queries.warmTar(spark, sfDir)
-    Queries.warmIvfStore(spark, sfDir)
-    Queries.warmSearchStore(spark, sfDir)
+    val loaded = Bench.load(spark, sfDir)
     val entries = names.map(n => n -> SparkEntry.queries(n))
+    val timings = Bench.time(spark, sfDir, entries, runs, loaded)
+    entries.foreach { case (name, _) =>
+      val ts = timings.runs.getOrElse(name, Nil).sorted
+      val failed = timings.failures.getOrElse(name, 0)
+      println(f"TIMEQ $name%-32s median=${timings.median(name)}%7.3f  failed=$failed  all=${ts.map(t => f"$t%.3f").mkString(",")}")
+    }
     planDir.foreach { dir =>
       new java.io.File(dir).mkdirs()
       entries.foreach { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/$name.txt"),
-          plan.getBytes("UTF-8"))
+        try java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name.txt"),
+          Bench.finalPlan(fn(spark, sfDir)).getBytes("UTF-8"))
+        catch { case e: Throwable =>
+          System.err.println(s"[timeq] $name plan failed: ${e.getMessage}")
+        }
+        Bench.release(spark, loaded)
       }
-    }
-    val loadRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def dropQueryRdds(): Unit =
-      for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
-           if !loadRdds.contains(id)) rdd.unpersist(blocking = true)
-    // a failed run is counted, never timed (Bench.timeOnce's rule): its
-    // elapsed time measures the failure, not the query
-    val timings = collection.mutable.Map[String, List[Double]]()
-    val failures = collection.mutable.Map[String, Int]().withDefaultValue(0)
-    for (_ <- 1 to runs; (name, fn) <- entries) {
-      System.gc(); Thread.sleep(150)
-      spark.sparkContext.setJobDescription(s"timeq: $name")
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        timings(name) = (System.nanoTime() - t0) / 1e9 :: timings.getOrElse(name, Nil)
-      } catch { case e: Throwable =>
-        System.err.println(s"[timeq] $name failed: ${e.getMessage}")
-        failures(name) += 1
-      }
-      spark.sparkContext.setJobDescription(null)
-      dropQueryRdds()
-    }
-    entries.foreach { case (name, _) =>
-      val ts = timings.getOrElse(name, Nil).sorted
-      val med = if (ts.isEmpty) -1.0 else ts(ts.length / 2)
-      println(f"TIMEQ $name%-32s median=$med%7.3f  failed=${failures(name)}  all=${ts.map(t => f"$t%.3f").mkString(",")}")
     }
     spark.stop()
   }

@@ -18,16 +18,12 @@ object Verify {
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // LOAD stage up front (same contract as Bench), so the persistent-RDD
-    // snapshot below separates long-lived graph/layout caches from
-    // per-query localCheckpoint blocks — freeing the latter at query end
-    // keeps the 138-query JVM's memory flat across the dump.
-    val g = graft.graph.TpchGraph(spark, sfDir)
-    g.nodes.count(); g.rels.count()
-    // shared deduplicated adjacency: LOAD-stage like nodes/rels (see Bench)
-    g.adjPairs.count(); g.bidirTriples.count(); g.nodeCount
-    graft.graph.GraphXBridge.materialize(spark, g)
-    val loadRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the graph half of Bench's LOAD stage, so the snapshot separates
+    // long-lived graph caches from per-query localCheckpoint blocks —
+    // freeing the latter at query end keeps the JVM's memory flat across
+    // the dump. The layouts are left to the entries that read them, so a
+    // failing layout write fails only those entries, inside their try.
+    val loaded = Bench.loadGraph(spark, sfDir)
     SparkEntry.queries.foreach { case (name, fn) =>
       if (only.isEmpty || only(name)) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -35,8 +31,7 @@ object Verify {
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
-             if !loadRdds.contains(id)) rdd.unpersist(blocking = false)
+        Bench.release(spark, loaded)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -424,9 +424,12 @@ object Dedup {
     // 100 TB a second corpus scan dwarfs everything this query does):
     //  1. window-count occupancy per h, drop hot shingles (the cap);
     //  2. groupBy(h) → sorted posting LISTS, singletons KEPT — this is the
-    //     inverted index itself, checkpointed lazily as the one shared
-    //     artifact both derivations below read (same physical RDD; the
-    //     groupBy reuses the window's h-partitioning, so no new exchange);
+    //     inverted index itself, checkpointed as the one shared artifact
+    //     both derivations below read (same physical RDD; the groupBy
+    //     reuses the window's h-partitioning, so no new exchange). Under
+    //     AQE `localCheckpoint(false)` materializes its shuffle stages
+    //     while the query is built, and the checkpoint is released by the
+    //     caller (in the harnesses, `Bench.release`);
     //  3. pairs: i<j explode over lists with ≥ 2 docs → count per (id1,
     //     id2) = intersection size. The pair structs carry ONLY the two
     //     ids (the r16 shape shuffled n1/n2 inside every pair row);

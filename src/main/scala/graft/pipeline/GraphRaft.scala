@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.operators.{Patterns, Retrieval, Vectors}
 import graft.cypher.{Ast, Parser, Planner}
-import graft.functions.{normName, tokenCountEstimate}
+import graft.functions.normName
 
 /** The GraphRAFT pipeline re-expressed Spark-first (SURVEY §3.1;
   * reference graphraft.py:41-66): NER entity matching → path/candidate
@@ -297,39 +297,25 @@ object GraphRaft {
           rows.map(_.getAs[Long]("nodeId")))
       }
 
-    // KNN backfill: global top-ef excluding found, until the budget is full.
-    // Stop semantics at rate 1 over the total context (retriever.py:96-107):
-    // the row that reaches EITHER budget is evicted → strict `<`.
-    import org.apache.spark.sql.expressions.Window
-    val found = spark.createDataFrame(
-      foundIds.map(java.lang.Long.valueOf).map(org.apache.spark.sql.Row(_)).toSeq.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("nodeId",
-          org.apache.spark.sql.types.LongType, nullable = false))))
+    // KNN backfill: global top-ef excluding found, at rate 1 over the TOTAL
+    // context (retriever.py:96-107) — the budget rule itself over the
+    // budget the query phase left. Every backfill row adds a new node, so
+    // stopping at the first row that reaches either reduced budget and
+    // evicting it keeps exactly the rows under both; the "\n\n" separator
+    // is whitespace, which the token estimate does not count.
     val knn = Vectors.scored(
-        g.nodes.where(col(sortingIndex).isNotNull)
+        g.nodes.where(col(sortingIndex).isNotNull && !col("nodeId").isin(foundIds.toSeq: _*))
           .select(Seq(col("nodeId"), col("name"), col(sortingIndex)) ++
             extraProps.map(col): _*),
         sortingIndex, qEmb)
-      .join(broadcast(found), Seq("nodeId"), "left_anti")
       .withColumn("similarity", round(col("similarity"), 6))
       .orderBy(col("similarity").desc, col("nodeId"))
       .limit(ef)
-      .withColumn("patterns", array(lit("No pattern")))
-    // backfill node's formatted text: prop lines + the one-element pattern
-    // list (same formatter as the query phase)
-    val bfText = concat(
-      concat_ws("\n", (Seq("name") ++ extraProps).map(p =>
-        when(col(p).isNotNull, concat(lit(s"$p: "), col(p).cast("string")))): _*),
-      lit("\npattern: ['No pattern']"))
-    val bfOrd = Window.orderBy(col("similarity").desc, col("nodeId"))
-    val backfill = knn
-      .withColumn("rank", (row_number().over(bfOrd) + lit(nFound)).cast("long"))
-      .withColumn("cum_total", lit(foundTokens) + sum(tokenCountEstimate(bfText))
-        .over(bfOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .where(col("rank") < maxNodes && col("cum_total") < maxTokens)
+      .withColumn("pattern", lit("No pattern"))
+    val backfill = Retrieval.budgetedAssemble(Seq(knn), maxNodes - nFound.toInt,
+        maxTokens - foundTokens, extraCols = extraProps)
       .select(col("nodeId"), col("name"), col("similarity"), col("patterns"),
-        col("rank"))
+        (col("rank") + nFound).as("rank"))
     base.unionByName(backfill).orderBy("rank")
   }
 

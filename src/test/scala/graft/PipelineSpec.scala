@@ -161,6 +161,32 @@ class PipelineSpec extends SparkSpec {
     // backfill is KNN-ordered: the best remaining similarity first
     val backSims = rows.drop(2).map(_.getAs[Double]("similarity"))
     assert(backSims.sortBy(-_).toSeq === backSims.toSeq)
+
+    // token mode (estimate: Σ 1 + ⌊chars/4⌋ per word). Alice's papers cost
+    // 27 each: "name:" 2, "P-alpha" 2, "pattern:" 3, "['(x1:Author" 4,
+    // "{name:" 2, "\"Alice\"})-[r1:WRITES]-(x2:Paper" 8, "{name:" 2,
+    // "\"P-alpha\"})']" 4. A backfill node costs 10 + its name: Carol (12)
+    // and Café (40) 12, P-alpha 12, MIT (1) 11, Stanford (2) 13. With
+    // qEmb = e0 the KNN order is 12, 20, 40 (sim 1), then 1, 2, … (sim 0).
+    val alice = Seq("""MATCH (x1:Author {name: "Alice"})-[r1:WRITES]-(x2:Paper) RETURN DISTINCT x2.name AS name""")
+    def idsRanksPatterns(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getAs[Long]("nodeId"), r.getAs[Long]("rank"),
+        r.getSeq[String](r.fieldIndex("patterns")).toSeq == Seq("No pattern")))
+    // 20 (27 < 54) kept, 21 reaches 54 and is evicted; the backfill has
+    // 54 - 27 = 27 left: 12 (12), 40 (24), MIT reaches 35 and is evicted
+    assert(idsRanksPatterns(GraphRaft.retrieveData(g, alice, Seq(1.0, 0.0, 0.0, 0.0),
+      maxNodes = Int.MaxValue, maxTokens = 54L, ef = 100)) ===
+      Seq((20L, 1L, false), (12L, 2L, true), (40L, 3L, true)))
+    // patternRate 0.5: 20 reaches 27 = 0.5·54 and is evicted, so nothing is
+    // found; the backfill at rate 1 fills 54: 12, 20, 40, MIT (47), and
+    // Stanford reaches 60 and is evicted
+    assert(idsRanksPatterns(GraphRaft.retrieveData(g, alice, Seq(1.0, 0.0, 0.0, 0.0),
+      maxNodes = Int.MaxValue, maxTokens = 54L, ef = 100, patternRate = 0.5)) ===
+      Seq((12L, 1L, true), (20L, 2L, true), (40L, 3L, true), (1L, 4L, true)))
+    // no candidate queries: backfill only, node budget 4 → 3 nodes
+    assert(idsRanksPatterns(GraphRaft.retrieveData(g, Nil, Seq(1.0, 0.0, 0.0, 0.0),
+      maxNodes = 4, ef = 100)) ===
+      Seq((12L, 1L, true), (20L, 2L, true), (40L, 3L, true)))
   }
 
   test("full run: question → answers → IR metrics") {
