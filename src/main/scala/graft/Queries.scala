@@ -2145,12 +2145,12 @@ object Queries {
 
   /** End-to-end budgeted retrieval over the TPC-H graph: a parsed candidate
     * query widened for retrieval, executed under the node budget,
-    * KNN-backfilled over the Part embeddings. The multi-job orchestration is
-    * still CTE-expressible for this fixed single-candidate case (the token
-    * budget is +inf, so only the node-budget events matter) — see
-    * [[OracleSqls]] `pipelineRetrieveSql`. Similarity is rounded to 6 at
-    * this driver surface for engine-portable hashing (the query-phase
-    * cosine is unrounded inside the operator). */
+    * KNN-backfilled over the Part embeddings — the two phases of one
+    * driver-side budget loop. For this fixed single-candidate case (the
+    * token budget is +inf, so only the node-budget events matter) the loop
+    * is CTE-expressible — see [[OracleSqls]] `pipelineRetrieveSql`.
+    * Similarity is rounded to 6 at this driver surface for engine-portable
+    * hashing (the query-phase cosine is unrounded inside the operator). */
   def pipelineRetrieve(spark: SparkSession, dir: String): DataFrame = {
     val g = graph(spark, dir)
     graft.pipeline.GraphRaft.retrieveData(g,
@@ -2165,7 +2165,9 @@ object Queries {
   /** §2.8 LLM2 context + answer formatting over the retrieval result
     * (retriever.py:39-40 + llm2.py:34,67-71): per-node "prop: value" lines
     * joined by a blank line in retrieval order, and the '|'-joined answer
-    * names. One tiny aggregate row — the exact string LLM2 would consume. */
+    * names. One tiny aggregate row — the exact string LLM2 would consume.
+    * The retrieval result is a local frame, so reading it twice recomputes
+    * nothing. */
   def fmtContext(spark: SparkSession, dir: String): DataFrame = {
     val retrieved = pipelineRetrieve(spark, dir)
     val ctx = Retrieval.formatContext(retrieved, Seq("name"), orderCol = "rank")

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * kernel behind BFS layers, harmonic centrality, eccentricity, FW-BW
   * reachability, betweenness' forward sweep and the Cypher
   * `shortestPath` planner; [[minRelax]] is the min-relaxation loop behind
-  * bounded SCC and SSSP. Both read their stop signal from the round's own
-  * checkpoint ([[checkpointObserved]]), never from a second probe job.
+  * bounded SCC and SSSP. Both, and the k-truss, coloring, MIS, matching and
+  * k-core peels, read their stop signal from the round's own checkpoint
+  * ([[checkpointObserved]]), never from a second probe job.
   */
 object GraphAlgorithms {
 
@@ -39,6 +40,19 @@ object GraphAlgorithms {
     val cp = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
     (cp, obs.get)
   }
+
+  /** [[checkpointObserved]] for a loop whose stop signal is the row count. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (cp, m) = checkpointObserved(df, count(lit(1)).as("rows"))
+    (cp, m("rows").asInstanceOf[Long])
+  }
+
+  /** The canonical undirected edge set of an (a, b) edge list: each edge
+    * once as a < b, self-loops dropped. */
+  private def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(least(col("a"), col("b")).as("a"),
+        greatest(col("a"), col("b")).as("b"))
+      .where(col("a") < col("b")).distinct()
 
   /** [[srcKeyedMinDist]]'s result: `layers(t)` holds the checkpointed
     * `(src, v, dist = t, carried…)` rows first reached at hop t (seeds at
@@ -72,9 +86,7 @@ object GraphAlgorithms {
     * oriented out-degree — the standard skew guard that keeps hub nodes
     * from enumerating deg² pairs. */
   private def perNodeTriangles(edges: DataFrame): (DataFrame, DataFrame) = {
-    val und = edges.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val und = canonicalEdges(edges)
     val sym = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
     val fwd = col("da") < col("db") ||
@@ -193,11 +205,7 @@ object GraphAlgorithms {
     * Returns one row: (n_edges, n_nodes) of the truss. */
   def kTrussStats(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 3, "truss semantics need k >= 3 (support threshold k-2 >= 1)")
-    var und = edges.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") < col("b")).distinct()
-      .localCheckpoint(true)
-    var edgeCount = und.count()
+    var (und, edgeCount) = checkpointCounted(canonicalEdges(edges))
     var round = 0
     var converged = edgeCount == 0
     while (round < iters && !converged) {
@@ -210,11 +218,10 @@ object GraphAlgorithms {
           Seq("x", "y"), "left_semi")
         .groupBy(col("x").as("a"), col("y").as("b"))
         .agg(count(lit(1)).as("supp"))
-      und = und.join(support, Seq("a", "b"), "left")
+      val (next, n) = checkpointCounted(und.join(support, Seq("a", "b"), "left")
         .where(coalesce(col("supp"), lit(0L)) >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val n = und.count()
+        .select(col("a"), col("b")))
+      und = next
       converged = n == edgeCount
       edgeCount = n
       round += 1
@@ -296,12 +303,8 @@ object GraphAlgorithms {
     def side(df: DataFrame): DataFrame =
       if (stateRows <= stateBroadcastLimit) broadcast(df) else df
     val carried = seeds.columns.filterNot(Set("src", "v")).map(col).toSeq
-    def layer(df: DataFrame, t: Int): (DataFrame, Long) = {
-      val (cp, m) = checkpointObserved(
-        df.select(Seq(col("src"), col("v"), lit(t).as("dist")) ++ carried: _*),
-        count(lit(1)).as("rows"))
-      (cp, m("rows").asInstanceOf[Long])
-    }
+    def layer(df: DataFrame, t: Int): (DataFrame, Long) =
+      checkpointCounted(df.select(Seq(col("src"), col("v"), lit(t).as("dist")) ++ carried: _*))
     val (seed, n0) = layer(seeds.distinct(), 0)
     var layers = Vector(seed)
     var rows = Vector(n0)
@@ -341,9 +344,7 @@ object GraphAlgorithms {
   /** Per-node color assignment behind [[jonesPlassmannColors]] (uncolored
     * after `iters` rounds → −1); exposed so properness is testable. */
   def jonesPlassmannAssign(edges: DataFrame, iters: Int): DataFrame = {
-    val und = edges.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val und = canonicalEdges(edges)
     val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
     val spark = edges.sparkSession
@@ -372,12 +373,12 @@ object GraphAlgorithms {
         .join(colored.select(col("v").as("cb"), col("color")),
           col("b") === col("cb"))
         .groupBy("v").agg(collect_set("color").as("cs"))
-      val assigned = winners.join(used, Seq("v"), "left")
-        .select(col("v"), coalesce(
-          expr("array_min(array_except(sequence(0L, cast(size(cs) as long)), cs))"),
-          lit(0L)).as("color"))
-        .localCheckpoint(true)
-      progress = assigned.limit(1).count() > 0
+      val (assigned, nAssigned) = checkpointCounted(
+        winners.join(used, Seq("v"), "left")
+          .select(col("v"), coalesce(
+            expr("array_min(array_except(sequence(0L, cast(size(cs) as long)), cs))"),
+            lit(0L)).as("color")))
+      progress = nAssigned > 0
       colored = colored.unionByName(assigned).localCheckpoint(true)
       unc = unc.join(winners, Seq("v"), "left_anti").localCheckpoint(true)
     }
@@ -401,9 +402,7 @@ object GraphAlgorithms {
     * node key; the frontier-free state is one (v, p) row per live node
     * and the live edge set only ever shrinks. */
   def lubyMisAssign(edges: DataFrame, iters: Int): DataFrame = {
-    val und = edges.select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val und = canonicalEdges(edges)
     var adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
       .localCheckpoint(true)
     var live = adj.select(col("a").as("v")).distinct()
@@ -424,11 +423,11 @@ object GraphAlgorithms {
       val nbrMin = adj
         .join(live.select(col("v").as("b"), col("p").as("np")), Seq("b"))
         .groupBy(col("a").as("v")).agg(min("np").as("mp"))
-      val winners = live.join(nbrMin, Seq("v"), "left")
-        .where(col("mp").isNull || col("p") < col("mp"))
-        .select("v")
-        .localCheckpoint(true)
-      progress = winners.limit(1).count() > 0
+      val (winners, nWinners) = checkpointCounted(
+        live.join(nbrMin, Seq("v"), "left")
+          .where(col("mp").isNull || col("p") < col("mp"))
+          .select("v"))
+      progress = nWinners > 0
       val excluded = adj
         .join(winners.select(col("v").as("a")), Seq("a"), "left_semi")
         .select(col("b").as("v")).distinct()
@@ -492,10 +491,7 @@ object GraphAlgorithms {
     * `iters` rounds; reports matched edges/nodes and the live remainder
     * (0 live edges ⇒ the matching is maximal). */
   def greedyMatching(edges: DataFrame, iters: Int): DataFrame = {
-    val base = edges
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .where(col("a") < col("b")).distinct()
+    val base = canonicalEdges(edges)
       .withColumn("p", graft.operators.Dedup.md5Long(
         concat_ws("-", col("a"), col("b"))))
       .localCheckpoint(true)
@@ -511,13 +507,11 @@ object GraphAlgorithms {
       val ends = live.select(col("a").as("v"), col("p"))
         .unionByName(live.select(col("b").as("v"), col("p")))
       val best = ends.groupBy("v").agg(min("p").as("bp"))
-      val matched = live
+      val (matched, nMatched) = checkpointCounted(live
         .join(best.select(col("v").as("a"), col("bp").as("pa")), Seq("a"))
         .join(best.select(col("v").as("b"), col("bp").as("pb")), Seq("b"))
         .where(col("p") === col("pa") && col("p") === col("pb"))
-        .select("a", "b")
-        .localCheckpoint(true)
-      val nMatched = matched.count()
+        .select("a", "b"))
       matchedEdges += nMatched
       matchedNodes += 2 * nMatched
       progress = nMatched > 0
@@ -547,12 +541,11 @@ object GraphAlgorithms {
     * oracle-expressible). The reach state is O(V) ≤ 2·|edges|, the guard
     * bound, counted off the edge set's own checkpoint. */
   def fwBwPartition(edges: DataFrame, iters: Int): DataFrame = {
-    val (dir, m) = checkpointObserved(edges.select(col("a"), col("b")).distinct(),
-      count(lit(1)).as("edges"))
+    val (dir, nEdges) = checkpointCounted(edges.select(col("a"), col("b")).distinct())
     val pivot = dir.agg(least(min(col("a")), min(col("b"))).as("v"))
       .select(lit(0L).as("src"), col("v"))
     def reach(adj: DataFrame): DataFrame =
-      srcKeyedMinDist(adj, pivot, iters, 2 * m("edges").asInstanceOf[Long])
+      srcKeyedMinDist(adj, pivot, iters, 2 * nEdges)
         .dist.select(col("v"))
     val fwd = reach(dir)
     val bwd = reach(dir.select(col("b").as("a"), col("a").as("b")))
@@ -984,18 +977,18 @@ object GraphAlgorithms {
     require(k >= 1, "peeling round semantics assume k >= 1")
     val adj = g.adjPairs
     val deg0 = adj.groupBy("a").agg(count(lit(1)).as("deg"))
-    var newDead = deg0.where(col("deg") < k).select(col("a").as("id"))
-      .localCheckpoint(true)
+    var (newDead, deadCount) =
+      checkpointCounted(deg0.where(col("deg") < k).select(col("a").as("id")))
     var deg = deg0.where(col("deg") >= k).localCheckpoint(true)
-    var deadCount = newDead.count()
     var rounds = 1
     while (rounds < iters && deadCount > 0) {
       // The first round's dead set is "every node with degree < k" — on a
       // power-law graph that can be the MAJORITY of all nodes, so a forced
-      // broadcast is an executor OOM at scale. The loop condition already
-      // paid for an exact count; use it: broadcast only when the dead set
-      // is genuinely small (1M ids ≈ 8 MB, the autoBroadcastJoinThreshold
-      // ballpark), else let it shuffle as a plain equi-join.
+      // broadcast is an executor OOM at scale. The loop condition reads an
+      // exact count off the dead set's checkpoint; use it: broadcast only
+      // when the dead set is genuinely small (1M ids ≈ 8 MB, the
+      // autoBroadcastJoinThreshold ballpark), else let it shuffle as a
+      // plain equi-join.
       val deadKeys = newDead.select(col("id").as("a"))
       val deadSide =
         if (deadCount <= math.min(1000000L, stateBroadcastLimit))
@@ -1007,10 +1000,11 @@ object GraphAlgorithms {
       val updated = deg.join(loss, Seq("a"), "left")
         .select(col("a"),
           (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-      newDead = updated.where(col("deg") < k).select(col("a").as("id"))
-        .localCheckpoint(true)
+      val (dead, n) =
+        checkpointCounted(updated.where(col("deg") < k).select(col("a").as("id")))
+      newDead = dead
+      deadCount = n
       deg = updated.where(col("deg") >= k).localCheckpoint(true)
-      deadCount = newDead.count()
       rounds += 1
     }
     // Membership = the oracle's convention: a survivor counts only if it

@@ -72,8 +72,8 @@ object GraphXBridge {
       .agg(count(lit(1)).as("n_nodes"))
 
   /** PageRank over the property graph (iterative — the GraphX sweet spot).
-    * Fixed iteration count for deterministic cost. MEASURED (DevPageRank,
-    * sf0.1, local[32]): a DataFrame join-iterate replica produces the
+    * Fixed iteration count for deterministic cost. MEASURED (sf0.1,
+    * local[32]): a DataFrame join-iterate replica produces the
     * identical top-k but runs 2-5× slower (5.0-15.5 s vs 2.9-6.1 s) — the
     * growing join lineage replans and re-shuffles the rank table every
     * step, while Pregel keeps edges co-partitioned across supersteps — so

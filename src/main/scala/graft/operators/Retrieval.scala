@@ -1,20 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Budgeted ranked retrieval assembly (SURVEY §2.7 T3; reference
   * retrieval/retriever.py:63-109 — the reference's most intricate operator)
   * plus the candidate-ranking ops around it (A6/P7, T4).
   *
-  * The reference's imperative loop: execute queries in rank order; per row,
-  * dedup on nodeId (first query wins, later queries only append provenance
+  * The reference's loop: execute queries in rank order; per row, dedup on
+  * nodeId (first query wins, later queries only append provenance
   * patterns); stop when the budget (node count or token count) is reached,
-  * evicting the overflowing row. Because execution order is deterministic
-  * (query rank, then similarity-desc row order), the whole loop is
-  * expressible declaratively: window dedup + running token sum + prefix
-  * filter — no driver-side iteration, fully distributed.
+  * evicting the last-added node. Each step reads the state the rows before
+  * it left — which nodes are in, how many tokens the context holds — so the
+  * loop is sequential, and [[Assembly]] runs it on the driver. Spark does
+  * the data work in one action per phase: it ranks every query's rows,
+  * prunes each query to what the budget can consume, and counts the tokens
+  * each row would add. The prune bounds what is collected: within a query
+  * the rows are distinct nodes, each costing ≥ 1 node and ≥ 1 token, so no
+  * row past `rate × min(maxNodes, maxTokens) + 1` can be reached.
   */
 object Retrieval {
 
@@ -45,9 +52,11 @@ object Retrieval {
     *   default; must be ≥ 1 for non-empty text and additive over
     *   whitespace-separated concatenation (the default is both).
     *
-    * Output: one row per kept node with first-wins props, ordered pattern
-    * list, `tokens` (the node's total contribution incl. its appends),
-    * `cum_tokens` (context size at its add event) and `rank`.
+    * Output: one local row per kept node, in rank order, with first-wins
+    * props (`query_rank`, `row_order`, `name`, `extraCols`, `similarity`),
+    * the ordered `patterns` list, `tokens` (the node's total contribution
+    * incl. its appends), `cum_tokens` (context size at its add event) and
+    * `rank`.
     */
   def budgetedAssemble(queryResults: Seq[DataFrame],
                        maxNodes: Int,
@@ -56,104 +65,123 @@ object Retrieval {
                        patternRate: Double = 1.0,
                        tokenCount: Column => Column =
                          graft.functions.tokenCountEstimate): DataFrame = {
-    // scale-safety prune, still provably faithful: within-query rows are
-    // DISTINCT nodes, so row p of a query is consumed only after p-1 adds,
-    // each costing ≥ 1 node and ≥ 1 token — nothing past the scaled budget
-    // can survive. The global windows below then see ≤ prune×|queries|
-    // rows, not the full result sets.
-    val prune = {
-      val cap = math.max(patternRate, 1.0) *
-        math.min(maxNodes.toDouble, maxTokens.toDouble) + 1
-      if (cap >= Int.MaxValue) Int.MaxValue else cap.toInt
+    val assembly = new Assembly(queryResults.head.sparkSession, maxNodes, maxTokens,
+      "name" +: extraCols, tokenCount)
+    assembly.run(queryResults, patternRate)
+    assembly.result
+  }
+
+  /** The reference's retrieval loop and its state: the kept nodes in
+    * insertion order and the formatted context's token count. Each [[run]]
+    * is one phase over the same state — [[budgetedAssemble]] runs one,
+    * `GraphRaft.retrieveData` runs the query phase and then the KNN
+    * backfill (retriever.py:96-109). `carried` are the node properties the
+    * context formats ("name" first); see [[budgetedAssemble]] for the rest. */
+  private[graft] final class Assembly(spark: SparkSession, maxNodes: Int, maxTokens: Long,
+                                      carried: Seq[String],
+                                      tokenCount: Column => Column =
+                                        graft.functions.tokenCountEstimate) {
+    private final class Node(val first: Row, val rowOrder: Int, val cumTokens: Long) {
+      val patterns = mutable.ArrayBuffer.empty[String]
+      var tokens = 0L
     }
-    val tagged = queryResults.zipWithIndex.map { case (df, i) =>
-      // deterministic within-query order: similarity desc, nodeId tiebreak
-      // (the rewritten queries ORDER BY similarity DESC, retriever.py:59)
-      df.withColumn("query_rank", lit(i))
-        .withColumn("row_order", row_number().over(
-          Window.partitionBy(lit(i)).orderBy(col("similarity").desc, col("nodeId"))))
-        .where(col("row_order") <= prune)
+    private val nodes = mutable.LinkedHashMap.empty[Any, Node]
+    private var context = 0L
+    private var eventSchema: StructType = _
+    // event row layout: query_rank, nodeId, carried…, similarity, pattern,
+    // then the add, separated-add and append token counts
+    private val simIdx = 2 + carried.length
+
+    def nodeIds: Seq[Any] = nodes.keys.toSeq
+
+    /** One phase: collect the events of `frames` (best first), pruned to
+      * what the budget can consume at `rate` and to `limit` rows per frame,
+      * then run the loop over them at `rate`. */
+    def run(frames: Seq[DataFrame], rate: Double, limit: Int = Int.MaxValue): Unit = {
+      val prune = math.min(limit,
+        (math.max(rate, 1.0) * math.min(maxNodes.toDouble, maxTokens.toDouble) + 1).toInt)
+      // formatted-context marginals (additive tokenizer): an ADD contributes
+      // the node's prop lines + its first pattern-list line (+ the "\n\n"
+      // separator when not first — whitespace, free under the default
+      // estimator but kept for formatter fidelity); an APPEND contributes
+      // ", '<pattern>'". DELIBERATE DEVIATION: the reference appends the
+      // one-element list itself (pattern.append(rec['pattern']),
+      // retriever.py:83), so its Python repr grows by ", ['p']" — a nested
+      // list that is almost certainly unintended there. We keep provenance a
+      // flat string list (the shape every consumer wants) and charge the flat
+      // repr; under the length/4 estimator the two dropped bracket chars can
+      // shift one append's cost by at most one token.
+      val nodeText = concat_ws("\n", carried.map(p =>
+        when(col(p).isNotNull, concat(lit(s"$p: "), col(p).cast("string")))): _*)
+      val addText = concat(nodeText, lit("\npattern: ['"), col("pattern"), lit("']"))
+      val appendText = concat(lit(", '"), col("pattern"), lit("'"))
+      def tokens(text: Column) = coalesce(tokenCount(text).cast("long"), lit(0L))
+      val ranked = frames.zipWithIndex.map { case (df, i) =>
+        // deterministic within-query order: similarity desc, nodeId tiebreak
+        // (the rewritten queries ORDER BY similarity DESC, retriever.py:59)
+        df.orderBy(col("similarity").desc, col("nodeId")).limit(prune)
+          .select(Seq(lit(i).as("query_rank"), col("nodeId")) ++ carried.map(col) ++
+            Seq(col("similarity"), col("pattern")): _*)
+      }
+      ranked.reduceOption(_ unionByName _).foreach { events =>
+        val withTokens = events
+          .orderBy(col("query_rank"), col("similarity").desc, col("nodeId"))
+          .select(col("*"), tokens(addText), tokens(concat(lit("\n\n"), addText)),
+            tokens(appendText))
+        eventSchema = withTokens.schema
+        loop(withTokens.collect(), rate)
+      }
     }
-    val unioned = tagged.reduce(_.unionByName(_))
-    val carried = Seq("name") ++ extraCols
 
-    val evOrd = Window.orderBy(col("query_rank"), col("row_order"))
-    val cumFrame = evOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val allFrame = evOrd.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val byNode = Window.partitionBy(col("nodeId"))
-      .orderBy(col("query_rank"), col("row_order"))
+    /** The loop: the first row for a node is an ADD, later ones APPENDs;
+      * the stop check runs after every event; on stop the last-added node
+      * is evicted and the phase ends. */
+    private def loop(events: Array[Row], rate: Double): Unit = {
+      var stop = false
+      var (query, rowOrder) = (-1, 0)
+      val it = events.iterator
+      while (!stop && it.hasNext) {
+        val e = it.next()
+        rowOrder = if (e.getInt(0) == query) rowOrder + 1 else 1
+        query = e.getInt(0)
+        val isAdd = !nodes.contains(e.get(1))
+        val cost = e.getLong(simIdx + (if (!isAdd) 4 else if (nodes.isEmpty) 2 else 3))
+        context += cost
+        val node = nodes.getOrElseUpdate(e.get(1), new Node(e, rowOrder, context))
+        node.patterns += e.getString(simIdx + 1)
+        node.tokens += cost
+        // stop check after every event: len >= rate*max_nodes (only an add
+        // can newly satisfy it) or formatted tokens >= rate*max_tokens.
+        // DELIBERATE GENERALIZATION: the reference's stop_retrieval is modal —
+        // count_tokens selects exactly ONE of the two checks (retriever.py:
+        // 63-69) — so with both budgets finite we check a hybrid it never
+        // exhibits. Callers wanting strict parity pass one budget and leave
+        // the other at its infinite default (maxTokens=Long.MaxValue ⇒ node
+        // mode; maxNodes=Int.MaxValue ⇒ token mode), which is what every
+        // driver entry and the pipeline do.
+        stop = context >= rate * maxTokens || (isAdd && nodes.size >= rate * maxNodes)
+      }
+      if (stop) {
+        val (id, evicted) = nodes.last
+        nodes -= id
+        context -= evicted.tokens
+      }
+    }
 
-    // formatted-context marginals (additive tokenizer): an ADD contributes
-    // the node's prop lines + its first pattern-list line (+ the "\n\n"
-    // separator when not first — whitespace, free under the default
-    // estimator but kept for formatter fidelity); an APPEND contributes
-    // ", '<pattern>'". DELIBERATE DEVIATION: the reference appends the
-    // one-element list itself (pattern.append(rec['pattern']),
-    // retriever.py:83), so its Python repr grows by ", ['p']" — a nested
-    // list that is almost certainly unintended there. We keep provenance a
-    // flat string list (the shape every consumer wants) and charge the flat
-    // repr; under the length/4 estimator the two dropped bracket chars can
-    // shift one append's cost by at most one token.
-    val nodeText = concat_ws("\n", carried.map(p =>
-      when(col(p).isNotNull, concat(lit(s"$p: "), col(p).cast("string")))): _*)
-    val addText = concat(nodeText, lit("\npattern: ['"), col("pattern"), lit("']"))
-    val appendText = concat(lit(", '"), col("pattern"), lit("'"))
-
-    val ev = unioned
-      .withColumn("is_add", row_number().over(byNode) === 1)
-      .withColumn("event_pos", row_number().over(evOrd).cast("long"))
-      .withColumn("n_adds", sum(when(col("is_add"), 1L).otherwise(0L)).over(cumFrame))
-      .withColumn("marginal", when(col("is_add"),
-          tokenCount(when(col("event_pos") > 1, concat(lit("\n\n"), addText))
-            .otherwise(addText)))
-        .otherwise(tokenCount(appendText)))
-      .withColumn("cum_tokens", sum(col("marginal")).over(cumFrame))
-      // stop check after every event: len >= rate*max_nodes (only an add
-      // can newly satisfy it) or formatted tokens >= rate*max_tokens.
-      // DELIBERATE GENERALIZATION: the reference's stop_retrieval is modal —
-      // count_tokens selects exactly ONE of the two checks (retriever.py:
-      // 63-69) — so with both budgets finite we check a hybrid it never
-      // exhibits. Callers wanting strict parity pass one budget and leave
-      // the other at its infinite default (maxTokens=Long.MaxValue ⇒ node
-      // mode; maxNodes=Int.MaxValue ⇒ token mode), which is what every
-      // driver entry and the pipeline do.
-      .withColumn("stop", col("cum_tokens") >= lit(patternRate * maxTokens) ||
-        (col("is_add") && col("n_adds") >= lit(patternRate * maxNodes)))
-      .withColumn("t_star", min(when(col("stop"), col("event_pos"))).over(allFrame))
-      .withColumn("last_add_pos", max(when(col("is_add") &&
-        col("event_pos") <= col("t_star"), col("event_pos"))).over(allFrame))
-      .withColumn("evict_node", max(when(col("event_pos") === col("last_add_pos"),
-        col("nodeId"))).over(allFrame))
-
-    // survivors: everything processed up to the stop event, minus the
-    // evicted last-added node (appends to surviving nodes at/<= t* stay —
-    // they already happened when the loop broke)
-    val kept = ev.where(
-      (col("t_star").isNull || col("event_pos") <= col("t_star")) &&
-      (col("evict_node").isNull || col("nodeId") =!= col("evict_node")))
-
-    // first-query-wins dedup + provenance accumulation (retriever.py:80-86:
-    // first occurrence sets props, later ones only append to `pattern`)
-    val perNode = kept
-      .groupBy(col("nodeId"))
-      .agg(
-        min(struct(Seq(col("query_rank"), col("row_order")) ++
-          carried.map(col) :+ col("similarity") :+ col("cum_tokens"): _*)).as("first"),
-        sum(col("marginal")).as("tokens"),
-        array_sort(collect_list(struct(col("query_rank"), col("row_order"),
-          col("pattern")))).as("provenance"))
-      .select(Seq(
-        col("nodeId"),
-        col("first.query_rank").as("query_rank"),
-        col("first.row_order").as("row_order")) ++
-        carried.map(c => col(s"first.$c").as(c)) ++ Seq(
-        col("first.similarity").as("similarity"),
-        transform(col("provenance"), p => p.getField("pattern")).as("patterns"),
-        col("tokens"),
-        col("first.cum_tokens").as("cum_tokens")): _*)
-
-    perNode.withColumn("rank",
-      row_number().over(Window.orderBy(col("query_rank"), col("row_order"))).cast("long"))
+    /** The kept nodes as one local DataFrame in rank order. */
+    def result: DataFrame = {
+      val f = eventSchema.fields
+      val schema = StructType(Seq(f(1), StructField("query_rank", IntegerType),
+          StructField("row_order", IntegerType)) ++ f.slice(2, simIdx + 1) ++ Seq(
+        StructField("patterns", ArrayType(StringType)), StructField("tokens", LongType),
+        StructField("cum_tokens", LongType), StructField("rank", LongType)))
+      val rows = nodes.values.zipWithIndex.map { case (n, i) =>
+        Row.fromSeq(Seq(n.first.get(1), n.first.getInt(0), n.rowOrder) ++
+          (2 to simIdx).map(n.first.get) ++
+          Seq(n.patterns.toList, n.tokens, n.cumTokens, i + 1L))
+      }
+      spark.createDataFrame(rows.toList.asJava, schema)
+    }
   }
 
   /** A6 in its native array form (reference llm1.py:53-58 `sort_cyphers`):

@@ -229,9 +229,11 @@ object GraphRaft {
     * (structural modify_query), execute in rank order, assemble under the
     * budget with first-wins dedup + provenance, then backfill with global
     * vector KNN excluding found ids (`pattern` = "No pattern",
-    * retriever.py:96-107). The query phase checks the budget at
+    * retriever.py:96-107). Both phases run one [[Retrieval.Assembly]]
+    * loop over one state: the query phase checks the budget at
     * `patternRate` (retriever.py:87), the backfill at rate 1 over the TOTAL
-    * context — query-found nodes included (retriever.py:105). */
+    * context — query-found nodes included (retriever.py:105). Each phase
+    * is one Spark action; the result is a local DataFrame in rank order. */
   def retrieveData(g: PropertyGraph, topQueries: Seq[String], qEmb: Seq[Double],
                    nodeProps: Seq[String] = Seq("name"),
                    sortingIndex: String = "nameEmbedding",
@@ -267,56 +269,21 @@ object GraphRaft {
       planner.plan(widened).withColumn("pattern", pattern)
     }
     val extraProps = nodeProps.filterNot(Set("name", "nodeId"))
-
-    // Materialize the budget result ONCE at the per-question boundary (the
-    // reference also collects records here): it is referenced three ways
-    // below (found-id exclusion, base union branch, found count/tokens) and
-    // is budget-bounded tiny — without this the whole union+windows subtree
-    // recomputes per reference. With no candidate queries the query phase is
-    // empty and only the KNN backfill runs (retriever.py:96 runs regardless).
-    val spark = g.nodes.sparkSession
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types._
-    val baseSchema = StructType(Seq(
-      StructField("nodeId", LongType), StructField("name", StringType),
-      StructField("similarity", DoubleType),
-      StructField("patterns", ArrayType(StringType)),
-      StructField("rank", LongType)))
-    val (base, nFound, foundTokens, foundIds) =
-      if (perQuery.isEmpty)
-        (spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          baseSchema), 0L, 0L, Array.empty[Long])
-      else {
-        val budget = Retrieval.budgetedAssemble(perQuery, maxNodes, maxTokens,
-          extraCols = extraProps, patternRate = patternRate)
-        val rows = budget.collect()
-        val b = spark.createDataFrame(rows.toSeq.asJava, budget.schema)
-          .select(col("nodeId"), col("name"), col("similarity"),
-            col("patterns"), col("rank"))
-        (b, rows.length.toLong, rows.map(_.getAs[Long]("tokens")).sum,
-          rows.map(_.getAs[Long]("nodeId")))
-      }
-
-    // KNN backfill: global top-ef excluding found, at rate 1 over the TOTAL
-    // context (retriever.py:96-107) — the budget rule itself over the
-    // budget the query phase left. Every backfill row adds a new node, so
-    // stopping at the first row that reaches either reduced budget and
-    // evicting it keeps exactly the rows under both; the "\n\n" separator
-    // is whitespace, which the token estimate does not count.
+    val assembly = new Retrieval.Assembly(g.nodes.sparkSession, maxNodes, maxTokens,
+      "name" +: extraProps)
+    assembly.run(perQuery, patternRate)
+    // KNN backfill from the same state: global top-ef excluding the found
+    // nodes, at rate 1 over the TOTAL context (retriever.py:96-107)
     val knn = Vectors.scored(
-        g.nodes.where(col(sortingIndex).isNotNull && !col("nodeId").isin(foundIds.toSeq: _*))
+        g.nodes.where(col(sortingIndex).isNotNull && !col("nodeId").isin(assembly.nodeIds: _*))
           .select(Seq(col("nodeId"), col("name"), col(sortingIndex)) ++
             extraProps.map(col): _*),
         sortingIndex, qEmb)
       .withColumn("similarity", round(col("similarity"), 6))
-      .orderBy(col("similarity").desc, col("nodeId"))
-      .limit(ef)
       .withColumn("pattern", lit("No pattern"))
-    val backfill = Retrieval.budgetedAssemble(Seq(knn), maxNodes - nFound.toInt,
-        maxTokens - foundTokens, extraCols = extraProps)
-      .select(col("nodeId"), col("name"), col("similarity"), col("patterns"),
-        (col("rank") + nFound).as("rank"))
-    base.unionByName(backfill).orderBy("rank")
+    assembly.run(Seq(knn), rate = 1.0, limit = ef)
+    assembly.result.select(col("nodeId"), col("name"), col("similarity"), col("patterns"),
+      col("rank"))
   }
 
   // ---- answer-name lookup (retriever.py:111-115) ----

@@ -630,6 +630,7 @@ class GraphAlgorithmsSpec extends SparkSpec {
 
   test("the frontier and min-relaxation loops start no probe job: no " +
     "job's call site is isEmpty/count/collect in GraphAlgorithms") {
+    // the k-truss, coloring, MIS, matching and k-core peels are covered too
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val graph = g(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L)),
@@ -660,7 +661,12 @@ class GraphAlgorithmsSpec extends SparkSpec {
         GraphAlgorithms.sccBoundedStats(edges.toDF("a", "b"), iters = 4),
         GraphAlgorithms.ssspBounded(
           edges.map { case (a, b) => (a, b, a + b) }.toDF("a", "b", "w"),
-          iters = 4, k = 10)
+          iters = 4, k = 10),
+        GraphAlgorithms.kTrussStats(edges.toDF("a", "b"), k = 3, iters = 4),
+        GraphAlgorithms.jonesPlassmannAssign(edges.toDF("a", "b"), iters = 4),
+        GraphAlgorithms.lubyMisAssign(edges.toDF("a", "b"), iters = 4),
+        GraphAlgorithms.greedyMatching(edges.toDF("a", "b"), iters = 4),
+        GraphAlgorithms.kCoreSizes(graph, k = 2, iters = 4)
       ).foreach(_.collect())
       org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -189,6 +189,28 @@ class PipelineSpec extends SparkSpec {
       Seq((12L, 1L, true), (20L, 2L, true), (40L, 3L, true)))
   }
 
+  test("retrieveData returns a local result: collecting it twice starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = GraphRaft.retrieveData(g,
+      Seq("""MATCH (x1:Author {name: "Alice"})-[r1:WRITES]-(x2:Paper) RETURN DISTINCT x2.name AS name"""),
+      qEmb = Seq(1.0, 0.0, 0.0, 0.0), maxNodes = 4, ef = 100)
+    // retrieveData's own jobs are posted before the listener is added
+    org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (first, second) = try {
+      val rows = (df.collect().toSeq, df.collect().toSeq)
+      org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+      rows
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(first.map(_.getAs[Long]("rank")) === Seq(1L, 2L, 3L))
+    assert(first === second)
+    assert(jobs.get === 0)
+  }
+
   test("full run: question → answers → IR metrics") {
     val result = GraphRaft.run(g,
       question = "Which papers is MIT connected to?",

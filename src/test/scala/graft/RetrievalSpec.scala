@@ -101,6 +101,14 @@ class RetrievalSpec extends SparkSpec {
     val out = Retrieval.budgetedAssemble(Seq(shuffled), 3, 100000L)
       .orderBy("rank").collect()
     assert(out.map(_.getAs[Long]("nodeId")).toSeq === Seq(8L, 9L))
+    // a null similarity sorts last (Spark's desc); a tie falls to nodeId
+    val nullAndTie = Seq((7L, "a", Some(0.1)), (10L, "d", None), (8L, "b", Some(0.99)),
+        (9L, "c", Some(0.5)), (6L, "e", Some(0.5)))
+      .toDF("nodeId", "name", "similarity").withColumn("pattern", lit("p"))
+    val all = Retrieval.budgetedAssemble(Seq(nullAndTie), 100, 100000L)
+      .orderBy("rank").collect()
+    assert(all.map(_.getAs[Long]("nodeId")).toSeq === Seq(8L, 6L, 9L, 7L, 10L))
+    assert(all.map(_.getAs[Int]("row_order")).toSeq === (1 to 5))
   }
 
   test("A6 array form: parallel arrays sorted by (-hits, num_results)") {
