@@ -77,8 +77,9 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
   }
 
-  /** Unpersist every RDD outside the `load` snapshot: a query's
-    * localCheckpoint blocks. Freeing them when the query's action has
+  /** Unpersist every RDD outside the `load` snapshot: the [[Checkpoint]]
+    * blocks a query's result still reads (loops release the rounds they
+    * replace themselves). Freeing them when the query's action has
     * finished keeps a long catalog JVM's memory flat — the round-6
     * 12.8–62 s graph_link_pred spread was this checkpoint debt piling onto
     * later passes, not the query itself. BLOCKING: with blocking=false the

@@ -306,11 +306,12 @@ object Queries {
     // pipelines (r17, guide §2.4): the local checkpoint leafs the scan
     // into a single shared RDD, where each method used to re-plan its own
     // parquet read (and the kmeans/codebook trainers re-planned it again
-    // inside). The checkpoint is released by the caller (in the harnesses,
+    // inside). The eager checkpoint ([[Checkpoint]]) is read lazily by
+    // the report, so it is released by the caller (in the harnesses,
     // `Bench.release`). Methods go through the shared *On
     // parameterizations, so the report stays row-identical to the
     // standalone entries.
-    val emb = T(spark, dir, "embeddings").localCheckpoint(false)
+    val emb = Checkpoint(T(spark, dir, "embeddings"))
     val qv = queryVec(spark, dir)
     val bf = Vectors.bruteForceTopK(emb, "vec_id",
       "embedding", qv, 10).select(col("vec_id"))

@@ -19,7 +19,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // the graph half of Bench's LOAD stage, so the snapshot separates
-    // long-lived graph caches from per-query localCheckpoint blocks —
+    // long-lived graph caches from per-query checkpoint blocks —
     // freeing the latter at query end keeps the JVM's memory flat across
     // the dump. The layouts are left to the entries that read them, so a
     // failing layout write fails only those entries, inside their try.

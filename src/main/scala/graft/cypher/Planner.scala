@@ -2,6 +2,7 @@ package graft.cypher
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.graph.PropertyGraph
 import Ast._
 
@@ -483,23 +484,33 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
       "relationship CREATE/MERGE anchors must bind distinct variables")
     val joined = nodeFrame(Nil, rq.a).crossJoin(nodeFrame(Nil, rq.b))
     val filtered = applyPreds(joined, rq.preds)
-    val pairs0 = filtered.select(
+    val pairs = filtered.select(
       col(s"${rq.a.varName}.nodeId").as("src"),
       col(s"${rq.b.varName}.nodeId").as("dst"))
-    // <- stores the reversed orientation; undirected MERGE creates a→b
+    graft.graph.PropertyGraph(g.nodes,
+      insertRels(pairs, rq.relType, rq.dir, rq.merge), g.labelsMutated)
+  }
+
+  /** The insert tail shared by [[planRelMutation]] and [[planBulkRel]]:
+    * `(src, dst)` endpoint pairs become `relType` edges appended to the
+    * relationships table, extra rel columns null-padded. `<-` (`dir` −1)
+    * stores the reversed orientation; undirected MERGE creates a→b. MERGE
+    * inserts only pairs with no existing edge of that type: one
+    * anti-join, probing both stored orientations when undirected. */
+  private def insertRels(pairs: DataFrame, relType: String, dir: Int,
+                         merge: Boolean): DataFrame = {
     val oriented =
-      if (rq.dir == -1)
-        pairs0.select(col("dst").as("src"), col("src").as("dst"))
-      else pairs0
+      if (dir == -1) pairs.select(col("dst").as("src"), col("src").as("dst"))
+      else pairs.select(col("src"), col("dst"))
     val newRels = oriented.select(
-      lit(rq.relType).as("relType"), col("src"), col("dst"))
+      lit(relType).as("relType"), col("src"), col("dst"))
     val added =
-      if (!rq.merge) newRels
+      if (!merge) newRels
       else {
-        val existing = g.rels.where(col("relType") === rq.relType)
+        val existing = g.rels.where(col("relType") === relType)
           .select(col("src"), col("dst"))
         val probe =
-          if (rq.dir == 0)
+          if (dir == 0)
             existing.unionByName(
               existing.select(col("dst").as("src"), col("src").as("dst")))
           else existing
@@ -511,7 +522,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
         // deterministic insert; the probe already covers both stored
         // orientations, so a pre-existing edge still suppresses it.
         val candidates =
-          if (rq.dir == 0)
+          if (dir == 0)
             newRels.select(col("relType"),
               least(col("src"), col("dst")).as("src"),
               greatest(col("src"), col("dst")).as("dst")).distinct()
@@ -524,8 +535,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
       df.withColumn(c,
         lit(null).cast(g.rels.schema.fields.find(_.name == c).get.dataType))
     }
-    graft.graph.PropertyGraph(g.nodes, g.rels.unionByName(padded),
-      g.labelsMutated)
+    g.rels.unionByName(padded)
   }
 
   /** Lower a [[MergeQuery]] onto the lakehouse merge: the one-row
@@ -775,7 +785,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
     * does, and the S3/J6 endpoint-existence rule by construction; MERGE
     * then inserts only pairs with no existing edge of that type (one
     * anti-join, both orientations probed + symmetric batches
-    * canonicalized when undirected, like [[planRelMutation]]); CREATE
+    * canonicalized when undirected — [[insertRels]]); CREATE
     * appends unconditionally. The whole batch is ONE frame and one
     * union — never a per-pair loop. */
   def planBulkRel(bq: BulkRelQuery): DataFrame = {
@@ -817,38 +827,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
         Seq("src"), "left_semi")
       .join(labeledIds(bq.tgt).withColumnRenamed("nodeId", "dst"),
         Seq("dst"), "left_semi")
-    // `<-` stores the reversed orientation, like planRelMutation
-    val oriented =
-      if (bq.dir == -1)
-        existing.select(col("dst").as("src"), col("src").as("dst"))
-      else existing.select(col("src"), col("dst"))
-    val newRels = oriented.select(
-      lit(bq.relType).as("relType"), col("src"), col("dst"))
-    val added =
-      if (!bq.merge) newRels
-      else {
-        val probe0 = g.rels.where(col("relType") === bq.relType)
-          .select(col("src"), col("dst"))
-        val probe =
-          if (bq.dir == 0)
-            probe0.unionByName(
-              probe0.select(col("dst").as("src"), col("src").as("dst")))
-          else probe0
-        val candidates =
-          if (bq.dir == 0)
-            newRels.select(col("relType"),
-              least(col("src"), col("dst")).as("src"),
-              greatest(col("src"), col("dst")).as("dst")).distinct()
-          else newRels.distinct()
-        candidates.join(probe, Seq("src", "dst"), "left_anti")
-      }
-    val extraCols = g.rels.columns.filterNot(
-      Set("relType", "src", "dst").contains)
-    val padded = extraCols.foldLeft(added) { (df, c) =>
-      df.withColumn(c,
-        lit(null).cast(g.rels.schema.fields.find(_.name == c).get.dataType))
-    }
-    g.rels.unionByName(padded)
+    insertRels(existing, bq.relType, bq.dir, bq.merge)
   }
 
   /** A statically STRING value cannot land in a numeric/boolean column —
@@ -1490,8 +1469,10 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
       // times. Linearizing is the same per-round eager-checkpoint
       // convention as the BFS this walk decorates; state is
       // O(pairs·depth), the order the caller's join output materializes
-      // anyway.
-      f = done.unionByName(stepped).localCheckpoint(true)
+      // anyway. The replaced round is released once its successor is.
+      val next = Checkpoint(done.unionByName(stepped))
+      Checkpoint.release(f)
+      f = next
     }
     f.select(col("src").as("__ws"), col("__wv"),
       col("__acc").as("__spnodes"), col("__racc").as("__sprels"))
@@ -2144,9 +2125,7 @@ final class Planner(g: PropertyGraph, params: Map[String, Any] = Map.empty) {
     val rvs = path.rels.zipWithIndex.map { case (r, i) =>
       r.varName.getOrElse(s"$anonPrefix$i") }
     for (i <- rvs.indices; j <- i + 1 until rvs.length)
-      df = df.where(!(col(s"${rvs(i)}.relType") === col(s"${rvs(j)}.relType") &&
-        col(s"${rvs(i)}.src") === col(s"${rvs(j)}.src") &&
-        col(s"${rvs(i)}.dst") === col(s"${rvs(j)}.dst")))
+      df = df.where(graft.operators.Patterns.trailNeq(rvs(i), rvs(j)))
     df
   }
 

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 
 /** Iterative graph algorithms expressed as plain DataFrame plans (no GraphX
   * conversion): the right choice when the per-iteration work is a
@@ -15,7 +16,9 @@ import org.apache.spark.sql.functions._
   * `shortestPath` planner; [[minRelax]] is the min-relaxation loop behind
   * bounded SCC and SSSP. Both, and the k-truss, coloring, MIS, matching and
   * k-core peels, read their stop signal from the round's own checkpoint
-  * ([[checkpointObserved]]), never from a second probe job.
+  * ([[graft.Checkpoint.observed]]), never from a second probe job, and
+  * every loop that replaces its state releases the replaced round once
+  * its successor is materialized.
   */
 object GraphAlgorithms {
 
@@ -31,21 +34,11 @@ object GraphAlgorithms {
   private[graft] def stateBroadcastLimit: Long =
     java.lang.Long.getLong("graft.graph.stateBroadcastLimit", 5000000L)
 
-  /** Eagerly localCheckpoint `df` and read `metrics` (named aggregates)
-    * off that same checkpoint job through `Dataset.observe`: a loop's
-    * stop signal costs no second `isEmpty`/`count`/`collect` job. */
-  private def checkpointObserved(df: DataFrame,
-                                 metrics: Column*): (DataFrame, Map[String, Any]) = {
-    val obs = Observation()
-    val cp = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
-    (cp, obs.get)
-  }
-
-  /** [[checkpointObserved]] for a loop whose stop signal is the row count. */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val (cp, m) = checkpointObserved(df, count(lit(1)).as("rows"))
-    (cp, m("rows").asInstanceOf[Long])
-  }
+  /** `df` — per-round state of at most `stateRows` rows — broadcast while
+    * `stateRows` stays under [[stateBroadcastLimit]], else left to a
+    * shuffle join. */
+  private def stateSide(df: DataFrame, stateRows: Long): DataFrame =
+    if (stateRows <= stateBroadcastLimit) broadcast(df) else df
 
   /** The canonical undirected edge set of an (a, b) edge list: each edge
     * once as a < b, self-loops dropped. */
@@ -53,6 +46,10 @@ object GraphAlgorithms {
     edges.select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") < col("b")).distinct()
+
+  /** Both orientations of an (a, b) edge list. */
+  private def symmetric(und: DataFrame): DataFrame =
+    und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
 
   /** [[srcKeyedMinDist]]'s result: `layers(t)` holds the checkpointed
     * `(src, v, dist = t, carried…)` rows first reached at hop t (seeds at
@@ -87,8 +84,7 @@ object GraphAlgorithms {
     * from enumerating deg² pairs. */
   private def perNodeTriangles(edges: DataFrame): (DataFrame, DataFrame) = {
     val und = canonicalEdges(edges)
-    val sym = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
+    val deg = symmetric(und).groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
     val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val oriented = und
@@ -149,8 +145,6 @@ object GraphAlgorithms {
     // per-layer state is O(sources·V): the same guard bound sizes the
     // kernel's forward joins and the backward sweep's below
     val stateRows = g.nodeCount * names.length
-    def stateSide(df: DataFrame): DataFrame =
-      if (stateRows <= stateBroadcastLimit) broadcast(df) else df
     val anchors = g.nodes
       .where(col("label") === label && col("name").isin(names: _*))
       .select(col("nodeId").as("src"), col("nodeId").as("v"),
@@ -167,18 +161,17 @@ object GraphAlgorithms {
       .select(col("src"), col("v"), col("sigma"), lit(0L).as("delta"))
     val deltas = fwd.layers.take(deepest).scanRight(leaf) { (layer, dw) =>
       val terms = adj
-        .join(stateSide(layer.as("l")), col("l.v") === col("a"))
-        .join(stateSide(dw.as("dw")),
+        .join(stateSide(layer.as("l"), stateRows), col("l.v") === col("a"))
+        .join(stateSide(dw.as("dw"), stateRows),
           col("dw.src") === col("l.src") && col("dw.v") === col("b"))
         .groupBy(col("l.src").as("src"), col("l.v").as("v"))
         .agg(least(sum(expr(
           "(l.sigma * (1000000 + delta)) div dw.sigma")),
           lit(deltaCap)).as("delta"))
-      layer
+      Checkpoint(layer
         .join(terms, Seq("src", "v"), "left")
         .select(col("src"), col("v"), col("sigma"),
-          coalesce(col("delta"), lit(0L)).as("delta"))
-        .localCheckpoint(true)
+          coalesce(col("delta"), lit(0L)).as("delta")))
     }
     deltas.reduce(_ unionByName _).where(col("v") =!= col("src"))
       .groupBy(col("v").as("node_id"))
@@ -205,11 +198,11 @@ object GraphAlgorithms {
     * Returns one row: (n_edges, n_nodes) of the truss. */
   def kTrussStats(edges: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 3, "truss semantics need k >= 3 (support threshold k-2 >= 1)")
-    var (und, edgeCount) = checkpointCounted(canonicalEdges(edges))
+    var (und, edgeCount) = Checkpoint.counted(canonicalEdges(edges))
     var round = 0
     var converged = edgeCount == 0
     while (round < iters && !converged) {
-      val sym = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
+      val sym = symmetric(und)
       val wedges = sym.select(col("a").as("u"), col("b").as("x"))
         .join(sym.select(col("a").as("u"), col("b").as("y")), Seq("u"))
         .where(col("x") < col("y"))
@@ -218,9 +211,10 @@ object GraphAlgorithms {
           Seq("x", "y"), "left_semi")
         .groupBy(col("x").as("a"), col("y").as("b"))
         .agg(count(lit(1)).as("supp"))
-      val (next, n) = checkpointCounted(und.join(support, Seq("a", "b"), "left")
+      val (next, n) = Checkpoint.counted(und.join(support, Seq("a", "b"), "left")
         .where(coalesce(col("supp"), lit(0L)) >= k - 2)
         .select(col("a"), col("b")))
+      Checkpoint.release(und)
       und = next
       converged = n == edgeCount
       edgeCount = n
@@ -300,22 +294,21 @@ object GraphAlgorithms {
     * unrolled oracle's round for round. */
   def srcKeyedMinDist(adj: DataFrame, seeds: DataFrame, maxHops: Int,
                       stateRows: Long, carry: Option[Column] = None): Layers = {
-    def side(df: DataFrame): DataFrame =
-      if (stateRows <= stateBroadcastLimit) broadcast(df) else df
     val carried = seeds.columns.filterNot(Set("src", "v")).map(col).toSeq
     def layer(df: DataFrame, t: Int): (DataFrame, Long) =
-      checkpointCounted(df.select(Seq(col("src"), col("v"), lit(t).as("dist")) ++ carried: _*))
+      Checkpoint.counted(df.select(Seq(col("src"), col("v"), lit(t).as("dist")) ++ carried: _*))
     val (seed, n0) = layer(seeds.distinct(), 0)
     var layers = Vector(seed)
     var rows = Vector(n0)
     while (layers.length <= maxHops && rows.last > 0) {
-      val reached = adj.join(side(layers.last), col("v") === col("a"))
+      val reached = adj.join(stateSide(layers.last, stateRows), col("v") === col("a"))
       val next = carry match {
         case Some(agg) => reached.groupBy(col("src"), col("b").as("v")).agg(agg)
         case None => reached.select(col("src"), col("b").as("v")).distinct()
       }
       val visited = layers.map(_.select(col("src"), col("v"))).reduce(_ unionByName _)
-      val (cp, n) = layer(next.join(side(visited), Seq("src", "v"), "left_anti"),
+      val (cp, n) = layer(
+        next.join(stateSide(visited, stateRows), Seq("src", "v"), "left_anti"),
         layers.length)
       layers :+= cp
       rows :+= n
@@ -344,20 +337,10 @@ object GraphAlgorithms {
   /** Per-node color assignment behind [[jonesPlassmannColors]] (uncolored
     * after `iters` rounds → −1); exposed so properness is testable. */
   def jonesPlassmannAssign(edges: DataFrame, iters: Int): DataFrame = {
-    val und = canonicalEdges(edges)
-    val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    val spark = edges.sparkSession
-    var unc = adj.select(col("a").as("v")).distinct()
-      .withColumn("p", graft.operators.Dedup.md5Long(col("v").cast("string")))
-      .localCheckpoint(true)
-    var colored = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("color",
-          org.apache.spark.sql.types.LongType))))
+    val adj = Checkpoint(symmetric(canonicalEdges(edges)))
+    var unc = Checkpoint(adj.select(col("a").as("v")).distinct()
+      .withColumn("p", graft.operators.Dedup.md5Long(col("v").cast("string"))))
+    var colored = unc.select(col("v"), lit(0L).as("color")).where(lit(false))
     var round = 0
     var progress = true
     while (round < iters && progress) {
@@ -365,23 +348,26 @@ object GraphAlgorithms {
       val nbrMax = adj.join(unc.select(col("v").as("a"), col("p")), Seq("a"))
         .join(unc.select(col("v").as("b"), col("p").as("np")), Seq("b"))
         .groupBy(col("a").as("v")).agg(max("np").as("mp"))
-      val winners = unc.join(nbrMax, Seq("v"), "left")
+      val winners = Checkpoint(unc.join(nbrMax, Seq("v"), "left")
         .where(col("mp").isNull || col("p") > col("mp"))
-        .select("v")
-        .localCheckpoint(true)
+        .select("v"))
       val used = winners.join(adj, col("v") === col("a"))
         .join(colored.select(col("v").as("cb"), col("color")),
           col("b") === col("cb"))
         .groupBy("v").agg(collect_set("color").as("cs"))
-      val (assigned, nAssigned) = checkpointCounted(
+      val (assigned, nAssigned) = Checkpoint.counted(
         winners.join(used, Seq("v"), "left")
           .select(col("v"), coalesce(
             expr("array_min(array_except(sequence(0L, cast(size(cs) as long)), cs))"),
             lit(0L)).as("color")))
       progress = nAssigned > 0
-      colored = colored.unionByName(assigned).localCheckpoint(true)
-      unc = unc.join(winners, Seq("v"), "left_anti").localCheckpoint(true)
+      val nextColored = Checkpoint(colored.unionByName(assigned))
+      val nextUnc = Checkpoint(unc.join(winners, Seq("v"), "left_anti"))
+      Checkpoint.release(winners, assigned, colored, unc)
+      colored = nextColored
+      unc = nextUnc
     }
+    Checkpoint.release(adj)
     colored.unionByName(unc.select(col("v"), lit(-1L).as("color")))
   }
 
@@ -402,20 +388,10 @@ object GraphAlgorithms {
     * node key; the frontier-free state is one (v, p) row per live node
     * and the live edge set only ever shrinks. */
   def lubyMisAssign(edges: DataFrame, iters: Int): DataFrame = {
-    val und = canonicalEdges(edges)
-    var adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
-    var live = adj.select(col("a").as("v")).distinct()
-      .withColumn("p", graft.operators.Dedup.md5Long(col("v").cast("string")))
-      .localCheckpoint(true)
-    val spark = edges.sparkSession
-    var decided = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("state",
-          org.apache.spark.sql.types.LongType))))
+    var adj = Checkpoint(symmetric(canonicalEdges(edges)))
+    var live = Checkpoint(adj.select(col("a").as("v")).distinct()
+      .withColumn("p", graft.operators.Dedup.md5Long(col("v").cast("string"))))
+    var decided = live.select(col("v"), lit(0L).as("state")).where(lit(false))
     var round = 0
     var progress = true
     while (round < iters && progress) {
@@ -423,27 +399,29 @@ object GraphAlgorithms {
       val nbrMin = adj
         .join(live.select(col("v").as("b"), col("p").as("np")), Seq("b"))
         .groupBy(col("a").as("v")).agg(min("np").as("mp"))
-      val (winners, nWinners) = checkpointCounted(
+      val (winners, nWinners) = Checkpoint.counted(
         live.join(nbrMin, Seq("v"), "left")
           .where(col("mp").isNull || col("p") < col("mp"))
           .select("v"))
       progress = nWinners > 0
-      val excluded = adj
+      val excluded = Checkpoint(adj
         .join(winners.select(col("v").as("a")), Seq("a"), "left_semi")
         .select(col("b").as("v")).distinct()
-        .join(winners, Seq("v"), "left_anti")
-        .localCheckpoint(true)
-      decided = decided
+        .join(winners, Seq("v"), "left_anti"))
+      val nextDecided = Checkpoint(decided
         .unionByName(winners.select(col("v"), lit(1L).as("state")))
-        .unionByName(excluded.select(col("v"), lit(0L).as("state")))
-        .localCheckpoint(true)
-      live = live.join(decided.select("v"), Seq("v"), "left_anti")
-        .localCheckpoint(true)
-      adj = adj
-        .join(live.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(live.select(col("v").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint(true)
+        .unionByName(excluded.select(col("v"), lit(0L).as("state"))))
+      val nextLive = Checkpoint(
+        live.join(nextDecided.select("v"), Seq("v"), "left_anti"))
+      val nextAdj = Checkpoint(adj
+        .join(nextLive.select(col("v").as("a")), Seq("a"), "left_semi")
+        .join(nextLive.select(col("v").as("b")), Seq("b"), "left_semi"))
+      Checkpoint.release(winners, excluded, decided, live, adj)
+      decided = nextDecided
+      live = nextLive
+      adj = nextAdj
     }
+    Checkpoint.release(adj)
     decided.unionByName(live.select(col("v"), lit(-1L).as("state")))
   }
 
@@ -491,11 +469,9 @@ object GraphAlgorithms {
     * `iters` rounds; reports matched edges/nodes and the live remainder
     * (0 live edges ⇒ the matching is maximal). */
   def greedyMatching(edges: DataFrame, iters: Int): DataFrame = {
-    val base = canonicalEdges(edges)
+    var live = Checkpoint(canonicalEdges(edges)
       .withColumn("p", graft.operators.Dedup.md5Long(
-        concat_ws("-", col("a"), col("b"))))
-      .localCheckpoint(true)
-    var live = base
+        concat_ws("-", col("a"), col("b")))))
     var matchedEdges = 0L
     var matchedNodes = 0L
     var round = 0
@@ -507,7 +483,7 @@ object GraphAlgorithms {
       val ends = live.select(col("a").as("v"), col("p"))
         .unionByName(live.select(col("b").as("v"), col("p")))
       val best = ends.groupBy("v").agg(min("p").as("bp"))
-      val (matched, nMatched) = checkpointCounted(live
+      val (matched, nMatched) = Checkpoint.counted(live
         .join(best.select(col("v").as("a"), col("bp").as("pa")), Seq("a"))
         .join(best.select(col("v").as("b"), col("bp").as("pb")), Seq("b"))
         .where(col("p") === col("pa") && col("p") === col("pb"))
@@ -517,11 +493,12 @@ object GraphAlgorithms {
       progress = nMatched > 0
       val deadNodes = matched.select(col("a").as("v"))
         .unionByName(matched.select(col("b").as("v")))
-      live = live
+      val next = Checkpoint(live
         .join(deadNodes.select(col("v").as("a")), Seq("a"), "left_anti")
         .join(deadNodes.select(col("v").as("b")), Seq("b"), "left_anti")
-        .select("a", "b", "p")
-        .localCheckpoint(true)
+        .select("a", "b", "p"))
+      Checkpoint.release(matched, live)
+      live = next
     }
     val spark = edges.sparkSession
     import spark.implicits._
@@ -541,7 +518,7 @@ object GraphAlgorithms {
     * oracle-expressible). The reach state is O(V) ≤ 2·|edges|, the guard
     * bound, counted off the edge set's own checkpoint. */
   def fwBwPartition(edges: DataFrame, iters: Int): DataFrame = {
-    val (dir, nEdges) = checkpointCounted(edges.select(col("a"), col("b")).distinct())
+    val (dir, nEdges) = Checkpoint.counted(edges.select(col("a"), col("b")).distinct())
     val pivot = dir.agg(least(min(col("a")), min(col("b"))).as("v"))
       .select(lit(0L).as("src"), col("v"))
     def reach(adj: DataFrame): DataFrame =
@@ -579,11 +556,9 @@ object GraphAlgorithms {
     * (v, m) row per node, monotonically non-increasing, and the whole
     * pass is 2·iters shuffles on the node key regardless of SCC count. */
   def sccBoundedStats(edges: DataFrame, iters: Int): DataFrame = {
-    val dadj = edges.select(col("a"), col("b")).distinct()
-      .localCheckpoint(true)
-    val nodes = dadj.select(col("a").as("v"))
-      .unionByName(dadj.select(col("b").as("v"))).distinct()
-      .localCheckpoint(true)
+    val dadj = Checkpoint(edges.select(col("a"), col("b")).distinct())
+    val nodes = Checkpoint(dadj.select(col("a").as("v"))
+      .unionByName(dadj.select(col("b").as("v"))).distinct())
     val labels = nodes.select(col("v"), col("v").as("m"))
     // forward-min: a takes b's label along a → b (the min node a reaches);
     // backward-min: b takes a's (the min node reaching b)
@@ -591,10 +566,9 @@ object GraphAlgorithms {
       lit(0L).as("w")), labels, iters)
     val bwd = minRelax(dadj.select(col("a"), col("b"), lit(0L).as("w")),
       labels, iters)
-    val joined = fwd.select(col("v"), col("m").as("fm"))
-      .join(bwd.select(col("v"), col("m").as("bm")), Seq("v"))
-      .localCheckpoint(true)
-    Seq(dadj, nodes, fwd, bwd).foreach(release) // nothing reads them past joined
+    val joined = Checkpoint(fwd.select(col("v"), col("m").as("fm"))
+      .join(bwd.select(col("v"), col("m").as("bm")), Seq("v")))
+    Checkpoint.release(dadj, nodes, fwd, bwd) // nothing reads them past joined
     val sccs = joined.where(col("fm") === col("bm"))
       .groupBy(col("fm").as("scc")).agg(count(lit(1)).as("sz"))
     sccs.agg(count(lit(1)).as("n_sccs"),
@@ -611,9 +585,8 @@ object GraphAlgorithms {
     * on the reversed key; no aggregation ever sees more than the edge
     * list. */
   def reciprocityStats(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("a"), col("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val e = Checkpoint(edges.select(col("a"), col("b"))
+      .where(col("a") =!= col("b")).distinct())
     val rec = e.join(e.select(col("b").as("a"), col("a").as("b")),
       Seq("a", "b"), "left_semi")
     e.agg(count(lit(1)).as("m"))
@@ -670,9 +643,8 @@ object GraphAlgorithms {
     * the k nearest (node_id, dist). */
   def ssspBounded(edges: DataFrame, iters: Int, k: Int,
                   sources: Option[DataFrame] = None): DataFrame = {
-    val sym = edges.select(col("a"), col("b"), col("w"))
-      .unionByName(edges.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .localCheckpoint(true)
+    val sym = Checkpoint(edges.select(col("a"), col("b"), col("w"))
+      .unionByName(edges.select(col("b").as("a"), col("a").as("b"), col("w"))))
     val src = sources
       .map(_.toDF("v").select(col("v")).distinct())
       .getOrElse(sym.agg(min(col("a")).as("v")))
@@ -697,21 +669,15 @@ object GraphAlgorithms {
     while (t < iters) {
       val relaxed = edges.join(state.select(col("v").as("a"), col("m")), Seq("a"))
         .select(col("b").as("v"), (col("m") + col("w")).as("m"))
-      val (next, obs) = checkpointObserved(
+      val (next, obs) = Checkpoint.observed(
         state.unionByName(relaxed).groupBy("v").agg(min("m").as("m")),
         count(lit(1)).as("c"), sum(col("m").cast("decimal(38,0)")).as("s"))
-      if (t > 0) release(state)
+      if (t > 0) Checkpoint.release(state)
       state = next
       val sig = Some((obs("c"), obs("s")))
       if (sig == prev) t = iters else { prev = sig; t += 1 }
     }
     state
-  }
-
-  /** Drop a checkpointed frame's blocks (a no-op for any other frame). */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 
   /** Personalized PageRank from an anchor node set — the graph-RAG
@@ -730,29 +696,26 @@ object GraphAlgorithms {
     // (w = 0.85/outdeg(a)); every round is then a single join + sum
     // instead of re-joining the degree table per round
     val deg = adj.groupBy("a").agg(count(lit(1)).cast("double").as("deg"))
-    val adjw = adj.join(deg, Seq("a"))
-      .select(col("a"), col("b"), (lit(0.85) / col("deg")).as("w"))
-      .localCheckpoint(true)
-    val anchors = g.nodes
+    val adjw = Checkpoint(adj.join(deg, Seq("a"))
+      .select(col("a"), col("b"), (lit(0.85) / col("deg")).as("w")))
+    val (anchors, nA) = Checkpoint.counted(g.nodes
       .where(col("label") === label && col("name").isin(names: _*))
-      .select(col("nodeId").as("v")).localCheckpoint(true)
-    // anchor sets are tiny by contract (query entities); a driver-side
-    // count here is one job over a materialized handful of rows
-    val nA = anchors.count().toDouble
-    // rank table is O(reached) ≤ O(V): broadcast behind the node-count
-    // guard so the pre-weighted O(E) adjacency never re-shuffles per round
-    val nNodes = g.nodeCount
-    def rankSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
+      .select(col("nodeId").as("v")))
     var pr = anchors.select(col("v"), lit(1.0 / nA).as("rank"))
     for (_ <- 1 to iters) {
-      val contrib = adjw.join(rankSide(pr), col("v") === col("a"))
+      // rank table is O(reached) ≤ O(V): broadcast behind the node-count
+      // guard so the pre-weighted O(E) adjacency never re-shuffles per round
+      val contrib = adjw.join(stateSide(pr, g.nodeCount), col("v") === col("a"))
         .select(col("b").as("v"), (col("rank") * col("w")).as("c"))
       val teleport = anchors.select(col("v"), lit(0.15 / nA).as("c"))
-      pr = contrib.unionByName(teleport)
-        .groupBy("v").agg(sum("c").as("rank"))
-        .localCheckpoint(true)
+      val next = Checkpoint(contrib.unionByName(teleport)
+        .groupBy("v").agg(sum("c").as("rank")))
+      Checkpoint.release(pr)
+      pr = next
     }
+    Checkpoint.release(adjw)
+    // past round 0 the rank table no longer reads the anchors
+    if (iters > 0) Checkpoint.release(anchors)
     // order by the ROUNDED rank: walk symmetry makes exact rank ties
     // common (all suppliers of a nation), and raw-double ordering would
     // let ulp-level engine differences pick different top-k members
@@ -761,19 +724,6 @@ object GraphAlgorithms {
       .orderBy(col("rank").desc, col("node_id")).limit(k)
   }
 
-  /** k-core decomposition by unrolled peeling: each round recomputes
-    * distinct-neighbor degrees over the surviving edge set and removes
-    * nodes with degree < k (two semi-joins — the edge payload never
-    * widens). A FIXED `iters` rounds keeps the computation deterministic
-    * and oracle-expressible; result parity with the oracle holds whether or
-    * not peeling has converged — the membership report below uses the
-    * oracle's own "still carries an edge between survivors" convention,
-    * valid at ANY iteration count, not just at the fixed point.
-    *
-    * Returns per-label counts of nodes still carrying an edge after the
-    * final round — the k-core membership report (the web-corpus
-    * quality/spam-filter use of k-core).
-    */
   /** Synchronous label propagation (LPA community detection): `iters`
     * fixed rounds of "adopt the most frequent neighbor label; ties break
     * to the smallest label", seeded with nodeId; isolated nodes keep their
@@ -787,9 +737,9 @@ object GraphAlgorithms {
     * Scale shape: per round, one shuffle counts (node, neighbor-label)
     * pairs — fan-in bounded by degree, partial aggregation map-side — and
     * the argmax folds over the already-reduced counts; the new label table
-    * left-joins back to the previous one. Both sides are O(V): no
-    * broadcasts anywhere, and localCheckpoint truncates the per-round
-    * lineage like the other iterative algorithms here. */
+    * left-joins back to the previous one. Both sides are O(V); each
+    * round's label table is checkpointed and the one it replaces released,
+    * like the other iterative algorithms here. */
   def labelPropagationSizes(g: PropertyGraph, iters: Int): DataFrame =
     lpaLabels(g, iters)
       .groupBy("lbl").agg(count(lit(1)).as("n_nodes"))
@@ -797,38 +747,34 @@ object GraphAlgorithms {
 
   /** Synchronous LPA label table (v, lbl) after `iters` rounds — the
     * shared core of [[labelPropagationSizes]] and [[modularityStats]]. */
-  private def lpaLabels(g: PropertyGraph, iters: Int,
-                        adj0: DataFrame = null): DataFrame = {
-    // callers with a pre-filtered adjacency pass it in; the default is the
-    // graph's shared cached adjacency
-    val adj = if (adj0 != null) adj0
-      else g.adjPairs
-    // label table is O(V): broadcast it behind the node-count guard so the
-    // O(E) adjacency is never re-shuffled per round (walkCorpus lesson)
-    val nNodes = g.nodeCount
-    def lblSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
+  private def lpaLabels(g: PropertyGraph, iters: Int): DataFrame = {
+    val adj = g.adjPairs
     // Every node with >= 1 neighbor adopts a fresh argmax label each round,
     // so only the isolated remainder ever carries its seed forward —
     // computed ONCE here, which saves a third per-round shuffle (the
     // label-carry left join the naive formulation pays).
-    val isolated = g.nodes.select(col("nodeId").as("v"))
+    val isolated = Checkpoint(g.nodes.select(col("nodeId").as("v"))
       .join(adj.select(col("a").as("v")).distinct(), Seq("v"), "left_anti")
-      .select(col("v"), col("v").as("lbl"))
-      .localCheckpoint(true)
-    var labels = g.nodes.select(col("nodeId").as("v"), col("nodeId").as("lbl"))
-      .localCheckpoint(true)
+      .select(col("v"), col("v").as("lbl")))
+    var labels = Checkpoint(
+      g.nodes.select(col("nodeId").as("v"), col("nodeId").as("lbl")))
     for (_ <- 1 to iters) {
+      // label table is O(V): broadcast it behind the node-count guard so
+      // the O(E) adjacency is never re-shuffled per round
       val counts = adj
-        .join(lblSide(labels.select(col("v").as("b"), col("lbl"))), Seq("b"))
+        .join(stateSide(labels.select(col("v").as("b"), col("lbl")), g.nodeCount),
+          Seq("b"))
         .groupBy(col("a"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
       // argmax by (count desc, label asc): max over (cnt, -lbl) pairs
       val best = counts.groupBy(col("a"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("a").as("v"), (-col("m.neg")).as("lbl"))
-      labels = best.unionByName(isolated).localCheckpoint(true)
+      val next = Checkpoint(best.unionByName(isolated))
+      Checkpoint.release(labels)
+      labels = next
     }
+    Checkpoint.release(isolated) // the seed table and every round's are materialized
     labels
   }
 
@@ -844,15 +790,12 @@ object GraphAlgorithms {
     * table plus a per-community degree rollup — no new shuffle shapes. */
   def modularityStats(g: PropertyGraph, iters: Int): DataFrame = {
     val adj = g.adjPairs
-    val labels = lpaLabels(g, iters, adj)
-    val nNodes = g.nodeCount
-    def lblSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
+    val labels = lpaLabels(g, iters)
     val e = adj
-      .join(lblSide(labels.select(col("v").as("a"), col("lbl").as("la"))),
-        Seq("a"))
-      .join(lblSide(labels.select(col("v").as("b"), col("lbl").as("lb"))),
-        Seq("b"))
+      .join(stateSide(labels.select(col("v").as("a"), col("lbl").as("la")),
+        g.nodeCount), Seq("a"))
+      .join(stateSide(labels.select(col("v").as("b"), col("lbl").as("lb")),
+        g.nodeCount), Seq("b"))
     val totals = e.agg(count(lit(1)).as("twom"),
       sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("e_in"))
     val degByC = adj.groupBy("a").agg(count(lit(1)).as("deg"))
@@ -893,11 +836,11 @@ object GraphAlgorithms {
     // an explicit whole-partition frame), so Catalyst fuses them into ONE
     // Window operator — one sort pass over the edge list, not two
     val byA = Window.partitionBy(col("a")).orderBy(col("b"))
-    val ranked0 = adj.select(col("a"), col("b"),
+    // one sort pass, reused below
+    val ranked0 = Checkpoint(adj.select(col("a"), col("b"),
         (row_number().over(byA) - 1).cast("long").as("rnk"),
         count(lit(1)).over(byA.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)).as("deg"))
-      .localCheckpoint(true) // one sort pass, reused below
+          Window.unboundedPreceding, Window.unboundedFollowing)).as("deg")))
     val degT = ranked0.where(col("rnk") === 0).select(col("a").as("n"),
       col("deg").as("ndeg")) // one row per node carrying an edge
     // O(V)-sized sides (degT, the walk state) are broadcast while V is
@@ -906,16 +849,15 @@ object GraphAlgorithms {
     // back to the shuffle join — the correct distributed-DeepWalk shape
     // when V itself is huge. Same guard pattern as kCoreSizes.
     val nNodes = g.nodeCount
-    def walkSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
     // deg(b) rides along with each edge so a step's output IS the next
-    // step's complete input — this join happens once, not once per step
-    val ranked = ranked0.as("r").join(walkSide(degT.as("d")), col("r.b") === col("d.n"))
+    // step's complete input — this join happens once, not once per step;
+    // the result is reused every step
+    val ranked = Checkpoint(ranked0.as("r")
+      .join(stateSide(degT.as("d"), nNodes), col("r.b") === col("d.n"))
       .select(col("r.a").as("a"), col("r.b").as("b"), col("r.rnk").as("rnk"),
-        col("d.ndeg").as("deg_b"))
-      .localCheckpoint(true) // reused every step
+        col("d.ndeg").as("deg_b")))
     val nodes = g.nodes.select(col("nodeId").as("start"), col("nodeId").as("c"))
-    // localCheckpoint erases outputPartitioning, so a plain equi-join here
+    // a checkpoint erases outputPartitioning, so a plain equi-join here
     // re-shuffles AND re-sorts the full O(E) ranked adjacency at EVERY
     // step (3 steps × 2.7M-row SMJ at sf0.1 was the whole query's cost).
     var cur = nodes.join(degT, col("c") === col("n"))
@@ -927,11 +869,10 @@ object GraphAlgorithms {
         col("c").cast("string"), lit("_"), lit(t.toString)))
       val picked = cur.select(col("start"), col("c"),
         pmod(h, col("deg")).as("pick"))
-      cur = ranked.as("r").join(walkSide(picked.as("p")),
+      cur = Checkpoint(ranked.as("r").join(stateSide(picked.as("p"), nNodes),
           col("p.c") === col("r.a") && col("p.pick") === col("r.rnk"))
         .select(col("p.start").as("start"), col("r.b").as("c"),
-          col("r.deg_b").as("deg"))
-        .localCheckpoint(true)
+          col("r.deg_b").as("deg")))
       acc = acc.unionByName(cur.select(col("start"), col("c"), lit(t).as("step")))
     }
     acc
@@ -946,7 +887,7 @@ object GraphAlgorithms {
     * step-band predicate — walk length is a constant, so per-walk fan-out
     * is O(steps·window), never data-dependent. */
   def skipGramPairs(g: PropertyGraph, steps: Int, window: Int): DataFrame = {
-    val walks = walkCorpus(g, steps).localCheckpoint(true)
+    val walks = Checkpoint(walkCorpus(g, steps))
     walks.as("x").join(walks.as("y"),
         col("x.start") === col("y.start") &&
         col("y.step") > col("x.step") &&
@@ -966,6 +907,19 @@ object GraphAlgorithms {
         sum(col("c")).as("sum_node"))
       .orderBy("step")
 
+  /** k-core decomposition by unrolled peeling: each round recomputes
+    * distinct-neighbor degrees over the surviving edge set and removes
+    * nodes with degree < k (two semi-joins — the edge payload never
+    * widens). A FIXED `iters` rounds keeps the computation deterministic
+    * and oracle-expressible; result parity with the oracle holds whether or
+    * not peeling has converged — the membership report below uses the
+    * oracle's own "still carries an edge between survivors" convention,
+    * valid at ANY iteration count, not just at the fixed point.
+    *
+    * Returns per-label counts of nodes still carrying an edge after the
+    * final round — the k-core membership report (the web-corpus
+    * quality/spam-filter use of k-core).
+    */
   def kCoreSizes(g: PropertyGraph, k: Int, iters: Int): DataFrame = {
     // DELTA peeling: degrees are counted over the full edge set ONCE;
     // each later round only subtracts the edges lost to the nodes that
@@ -978,8 +932,8 @@ object GraphAlgorithms {
     val adj = g.adjPairs
     val deg0 = adj.groupBy("a").agg(count(lit(1)).as("deg"))
     var (newDead, deadCount) =
-      checkpointCounted(deg0.where(col("deg") < k).select(col("a").as("id")))
-    var deg = deg0.where(col("deg") >= k).localCheckpoint(true)
+      Checkpoint.counted(deg0.where(col("deg") < k).select(col("a").as("id")))
+    var deg = Checkpoint(deg0.where(col("deg") >= k))
     var rounds = 1
     while (rounds < iters && deadCount > 0) {
       // The first round's dead set is "every node with degree < k" — on a
@@ -1001,12 +955,15 @@ object GraphAlgorithms {
         .select(col("a"),
           (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
       val (dead, n) =
-        checkpointCounted(updated.where(col("deg") < k).select(col("a").as("id")))
+        Checkpoint.counted(updated.where(col("deg") < k).select(col("a").as("id")))
+      val nextDeg = Checkpoint(updated.where(col("deg") >= k))
+      Checkpoint.release(newDead, deg)
       newDead = dead
       deadCount = n
-      deg = updated.where(col("deg") >= k).localCheckpoint(true)
+      deg = nextDeg
       rounds += 1
     }
+    Checkpoint.release(newDead)
     // Membership = the oracle's convention: a survivor counts only if it
     // still carries an edge TO ANOTHER SURVIVOR. At the fixed point this
     // equals the deg table (every survivor keeps >= k >= 1 alive
@@ -1047,8 +1004,7 @@ object GraphAlgorithms {
     */
   def linkPredictionTopK(g: PropertyGraph, maxHubDeg: Int, k: Int): DataFrame = {
     val adj = g.adjPairs // wedge sides + anti-join probe + degrees
-    val deg = adj.groupBy("a").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = Checkpoint(adj.groupBy("a").agg(count(lit(1)).as("deg")))
     val zAdj = adj.as("e").join(deg.as("d"), col("e.a") === col("d.a"))
       .where(col("d.deg") <= maxHubDeg)
       .select(col("e.a").as("z"), col("e.b").as("n"), col("d.deg").as("deg_z"))
@@ -1088,34 +1044,38 @@ object GraphAlgorithms {
     * by design (the rels table is the multigraph). Requires a non-empty
     * edge set (max(raw) = 0 would null the division). */
   def hits(g: PropertyGraph, iters: Int, k: Int): DataFrame = {
-    val edges = g.rels.select("src", "dst").localCheckpoint(true)
-    val nodes = g.nodes.select(col("nodeId").as("id")).localCheckpoint(true)
-    // score tables are O(V): broadcast behind the node-count guard so the
-    // O(E) edge list never re-shuffles per half-round (walkCorpus lesson)
-    val nNodes = g.nodeCount
-    def scoreSide(df: DataFrame): DataFrame =
-      if (nNodes <= stateBroadcastLimit) broadcast(df) else df
+    val edges = Checkpoint(g.rels.select("src", "dst"))
+    val nodes = Checkpoint(g.nodes.select(col("nodeId").as("id")))
     // scores stay SPARSE through the loop: an absent id means s = 0, which
     // contributes nothing to any sum and never wins the max (raws are
     // non-negative), so the per-step dense left-join against the node set
     // — a whole extra shuffle per round — is deferred to the final output.
     // Only `raw` (referenced by both the max and the division) is eagerly
     // truncated; one materialization per step instead of a join + one.
-    def step(scores: DataFrame, toHub: Boolean): DataFrame = {
+    // Score tables are O(V): broadcast behind the node-count guard so the
+    // O(E) edge list never re-shuffles per half-round.
+    def rawScores(scores: DataFrame, toHub: Boolean): DataFrame = {
       val (joinKey, grpKey) = if (toHub) ("dst", "src") else ("src", "dst")
-      val raw = edges.join(
-          scoreSide(scores.withColumnRenamed("id", joinKey)), Seq(joinKey))
-        .groupBy(col(grpKey).as("id")).agg(sum("s").as("raw"))
-        .localCheckpoint(true)
+      Checkpoint(edges
+        .join(stateSide(scores.withColumnRenamed("id", joinKey), g.nodeCount),
+          Seq(joinKey))
+        .groupBy(col(grpKey).as("id")).agg(sum("s").as("raw")))
+    }
+    def normalized(raw: DataFrame): DataFrame =
       raw.crossJoin(broadcast(raw.agg(max("raw").as("m"))))
         .select(col("id"), expr("(raw * 1000000) div m").as("s"))
-    }
     var hub = nodes.select(col("id"), lit(1000000L).as("s"))
     var auth = hub
+    var raws = Seq.empty[DataFrame] // the checkpoints behind hub and auth
     for (_ <- 1 to iters) {
-      auth = step(hub, toHub = false)
-      hub = step(auth, toHub = true)
+      val authRaw = rawScores(hub, toHub = false)
+      auth = normalized(authRaw)
+      val hubRaw = rawScores(auth, toHub = true)
+      hub = normalized(hubRaw)
+      Checkpoint.release(raws: _*)
+      raws = Seq(authRaw, hubRaw)
     }
+    Checkpoint.release(edges)
     nodes
       .join(hub.withColumnRenamed("s", "hub_score"), Seq("id"), "left")
       .join(auth.withColumnRenamed("s", "auth_score"), Seq("id"), "left")

@@ -57,9 +57,9 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
     * 100 TB this is not a cache but the adjacency a graph store keeps
     * materialized (bucketed by `a`) on disk; every algorithm consuming
     * [[adjPairs]] instead of re-deriving it is exactly what makes that
-    * swap a one-line storage change. Unlike the per-query
-    * `localCheckpoint` this replaces, the cached plan keeps its lineage,
-    * so an eviction recomputes instead of failing. */
+    * swap a one-line storage change. Unlike a per-query
+    * [[graft.Checkpoint]], the cached plan keeps its lineage, so an
+    * eviction recomputes instead of failing. */
   lazy val adjPairs: DataFrame = bidir.select(col("a"), col("b")).distinct()
     .persist(StorageLevel.MEMORY_AND_DISK)
 

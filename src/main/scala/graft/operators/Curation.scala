@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.functions._
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
@@ -763,11 +764,10 @@ object Curation {
     val tok = base.select(col("doc_id"), explode(col("ws")).as("t"))
       .select(col("doc_id"), bucket(col("t")).as("slot"))
       .groupBy("doc_id", "slot").agg(count(lit(1)).as("cnt"))
-    val feats = tok
+    val feats = Checkpoint(tok
       .unionByName(yv.select(col("doc_id"), lit(dim.toLong).as("slot"),
         lit(1L).as("cnt")))
-      .join(yv, "doc_id")
-      .localCheckpoint(true)
+      .join(yv, "doc_id"))
     def margins(wdf: DataFrame): DataFrame =
       feats.join(broadcast(wdf), "slot")
         .groupBy("doc_id", "y").agg(sum(expr("cnt * w")).as("m"))
@@ -777,9 +777,10 @@ object Curation {
       val mist = margins(wdf).where(expr("y * m <= 0")).select("doc_id")
       val grad = feats.join(mist, "doc_id")
         .groupBy("slot").agg(sum(expr("y * cnt")).as("g"))
-      wdf = wdf.join(grad, Seq("slot"), "left")
-        .select(col("slot"), (col("w") + coalesce(col("g"), lit(0L))).as("w"))
-        .localCheckpoint(true)
+      val next = Checkpoint(wdf.join(grad, Seq("slot"), "left")
+        .select(col("slot"), (col("w") + coalesce(col("g"), lit(0L))).as("w")))
+      Checkpoint.release(wdf)
+      wdf = next
     }
     val fm = margins(wdf)
       .agg(sum(when(expr("y * m <= 0"), 1L).otherwise(0L)).as("n_mistakes"))

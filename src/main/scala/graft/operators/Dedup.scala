@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.functions._
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -426,9 +427,9 @@ object Dedup {
     //  2. groupBy(h) → sorted posting LISTS, singletons KEPT — this is the
     //     inverted index itself, checkpointed as the one shared artifact
     //     both derivations below read (same physical RDD; the groupBy
-    //     reuses the window's h-partitioning, so no new exchange). Under
-    //     AQE `localCheckpoint(false)` materializes its shuffle stages
-    //     while the query is built, and the checkpoint is released by the
+    //     reuses the window's h-partitioning, so no new exchange). The
+    //     eager checkpoint ([[graft.Checkpoint]]) runs while the query is
+    //     built, and the result reads it lazily, so it is released by the
     //     caller (in the harnesses, `Bench.release`);
     //  3. pairs: i<j explode over lists with ≥ 2 docs → count per (id1,
     //     id2) = intersection size. The pair structs carry ONLY the two
@@ -447,9 +448,8 @@ object Dedup {
       .withColumn("__occ", count(lit(1)).over(Window.partitionBy(col("h"))))
       .where(col("__occ") <= maxPostings)
       .select(col("h"), col("doc_id"))
-    val lists = kept.groupBy(col("h"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .localCheckpoint(false)
+    val lists = Checkpoint(kept.groupBy(col("h"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("ids")))
     val pairs = lists.where(size(col("ids")) > 1)
       .select(explode(flatten(transform(col("ids"), (x, i) =>
         transform(slice(col("ids"), i + lit(2), size(col("ids"))),

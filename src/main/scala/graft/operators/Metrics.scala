@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 
 /** IR metric suite (SURVEY §2.5 A5; reference compute_metrics.py:3-64):
   * per-question precision / recall / F1 / hit@k / recall@k / MRR over
@@ -83,21 +84,20 @@ object Metrics {
     val spark = df.sparkSession
     val p = array_distinct(preds)
     val l = array_distinct(labels)
-    val per = df.select(qid.as("qid"),
+    val (per, nQuestions) = Checkpoint.counted(df.select(qid.as("qid"),
         size(array_intersect(p, l)).cast("long").as("inter"),
         size(p).cast("long").as("np"), size(l).cast("long").as("nl"))
       .select(col("qid"),
         expr("CASE WHEN np > 0 THEN (inter * 1000000) div np ELSE 0 END")
           .as("prec_micro"),
         expr("CASE WHEN nl > 0 THEN (inter * 1000000) div nl ELSE 0 END")
-          .as("rec_micro"))
-      .localCheckpoint(true)
-    if (per.isEmpty) {
+          .as("rec_micro")))
+    if (nQuestions == 0) {
       // zero questions: 'tp div n_questions' would divide by zero and the
       // order-statistic probes would return no rows, collapsing the
       // crossJoins to an empty result — callers expect exactly one summary
-      // row, so short-circuit to the all-zero one (cheap: `per` is already
-      // eagerly checkpointed above)
+      // row, so short-circuit to the all-zero one
+      Checkpoint.release(per)
       return spark.range(1).select(
         lit(0L).as("n_questions"),
         lit(0L).as("mean_prec_micro"),
@@ -113,7 +113,7 @@ object Metrics {
         "WHEN u < 919699 THEN 2 WHEN u < 981012 THEN 3 " +
         "WHEN u < 996340 THEN 4 WHEN u < 999406 THEN 5 " +
         "WHEN u < 999917 THEN 6 ELSE 7 END"
-    val res = per.crossJoin(broadcast(bs))
+    val res = Checkpoint(per.crossJoin(broadcast(bs))
       .select(col("b"), col("prec_micro"), col("rec_micro"), expr(
         // translate == regexp_replace('[a-f]','') on md5 hex (identical
         // digits kept, r16 opt: no per-row regex over b×questions rows)
@@ -128,8 +128,7 @@ object Metrics {
         sum("mult").as("sm"))
       .select(col("b"),
         expr("sp div greatest(sm, 1)").as("mp"),
-        expr("sr div greatest(sm, 1)").as("mr"))
-      .localCheckpoint(true)
+        expr("sr div greatest(sm, 1)").as("mr")))
     val loRank = b * 5 / 100 + 1
     val hiRank = (b * 95 + 99) / 100
     def stat(c: String, rank: Int, out: String): DataFrame =

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 
 /** Ingest-time data profiling (ANALYZE-style): per-column row/null/distinct
   * counts and min/max, computed in ONE pass over the table — all per-column
@@ -67,7 +68,7 @@ object Profile {
     // an EMPTY side makes the distance undefined (0/0) — surface that as
     // NULL, never as a misleading "no drift" zero
     val defined = col("t_ref") > 0 && col("t_cur") > 0
-    val perBin = counts
+    val perBin = Checkpoint(counts
       .withColumn("t_ref", sum("n_ref").over(w))
       .withColumn("t_cur", sum("n_cur").over(w))
       .select(col("bin"), col("n_ref"), col("n_cur"),
@@ -78,8 +79,7 @@ object Profile {
         when(defined, round(lit(1000000.0) * d.cast("double") * d.cast("double") /
           (col("t_ref").cast("double") * col("t_cur") *
             (col("n_ref") + col("n_cur")))).cast("long"))
-          .as("chi2_micro"))
-      .localCheckpoint(true)
+          .as("chi2_micro")))
     val rollup = perBin.agg(
       sum("n_ref").as("n_ref"), sum("n_cur").as("n_cur"),
       sum("l1_micro").as("l1_micro"), sum("chi2_micro").as("chi2_micro"))

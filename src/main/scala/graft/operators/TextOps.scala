@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.functions._
 
 /** Text analysis for large-scale training-data pipelines: language ID,
@@ -388,11 +389,11 @@ object TextOps {
       expr(s"substring(regexp_replace(word, '(.)', " +
         s"concat(char(31), char(31), '$$1')), 2)"),
       lit(D))
-    var vocab = docs
+    // re-scanned every round
+    var vocab = Checkpoint(docs
       .select(explode(graft.functions.words(lower(col("text")))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .select(seeded.as("enc"), col("freq"))
-      .localCheckpoint(true) // re-scanned every round
+      .select(seeded.as("enc"), col("freq")))
     val merges = collection.mutable.ListBuffer[(Int, String, String, Long)]()
     var exhausted = false
     for (r <- 1 to k if !exhausted) {
@@ -411,13 +412,15 @@ object TextOps {
         val (a, b, f) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r, a, b, f))
-        vocab = vocab.select(
+        val next = Checkpoint(vocab.select(
             call_function("replace", col("enc"),
               lit(D + a + DD + b + D), lit(D + a + b + D)).as("enc"),
-            col("freq"))
-          .localCheckpoint(true)
+            col("freq")))
+        Checkpoint.release(vocab)
+        vocab = next
       }
     }
+    Checkpoint.release(vocab) // the merges are collected; nothing reads it
     import spark.implicits._
     merges.toSeq.toDF("rank", "a", "b", "f")
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.functions._
 
 /** Vector similarity & KNN (SURVEY §2.6 V1-V5; reference
@@ -610,9 +611,8 @@ object Vectors {
       .select(col("id"), col("i"),
         round(col("xv") * 1000L, 0).cast("long").as("x"))
     val means = x0.groupBy("i").agg(expr("sum(x) div count(1)").as("mu"))
-    x0.join(broadcast(means), Seq("i"))
-      .select(col("id"), col("i"), (col("x") - col("mu")).as("x"))
-      .localCheckpoint(true)
+    Checkpoint(x0.join(broadcast(means), Seq("i"))
+      .select(col("id"), col("i"), (col("x") - col("mu")).as("x")))
   }
 
   /** Power-iteration rounds over an already-centered (id, i, x) table;
@@ -625,18 +625,22 @@ object Vectors {
         .groupBy("id").agg(sum(expr("x * v")).as("dp"))
       val u = x.join(dots, Seq("id"))
         .groupBy("i").agg(sum(expr("x * dp")).as("u"))
-      v = u.crossJoin(broadcast(u.agg(max(abs(col("u"))).as("m"))))
-        .select(col("i"), expr("(u * 1000) div greatest(m, 1)").as("v"))
-        .localCheckpoint(true)
+      val next = Checkpoint(u.crossJoin(broadcast(u.agg(max(abs(col("u"))).as("m"))))
+        .select(col("i"), expr("(u * 1000) div greatest(m, 1)").as("v")))
+      Checkpoint.release(v)
+      v = next
     }
     v
   }
 
   def powerIterationTopDir(emb: DataFrame, idCol: String, vecCol: String,
-                           iters: Int): DataFrame =
-    powerIterDir(milliCentered(emb, idCol, vecCol), iters)
-      .orderBy("i")
+                           iters: Int): DataFrame = {
+    val x = milliCentered(emb, idCol, vecCol)
+    val v = powerIterDir(x, iters)
+    if (iters > 0) Checkpoint.release(x) // v reads x lazily only when no round ran
+    v.orderBy("i")
       .select(col("i").cast("long").as("dim"), col("v").as("v_milli"))
+  }
 
   /** All-but-the-top retrieval (Mu & Viswanath, ICLR'18): center the
     * corpus, remove the top principal direction, THEN do cosine top-k.
@@ -733,11 +737,11 @@ object Vectors {
                 lambdaTenths: Int, exclude: Seq[Long] = Nil): DataFrame = {
     val spark = emb.sparkSession
     def micro(c: Column): Column = round(c * 1000000L, 0).cast("long")
-    val poolV = bruteForceTopK(emb, idCol, vecCol, query, poolSize, exclude)
+    // poolSize rows, consumed twice
+    val poolV = Checkpoint(bruteForceTopK(emb, idCol, vecCol, query, poolSize, exclude)
       .join(emb.select(col(idCol),
         col(vecCol).cast("array<double>").as("v")), Seq(idCol))
-      .select(col(idCol).as("id"), micro(col("similarity")).as("qs"), col("v"))
-      .localCheckpoint(true) // poolSize rows, consumed twice
+      .select(col(idCol).as("id"), micro(col("similarity")).as("qs"), col("v")))
     val qsMap = poolV.select("id", "qs").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val simMap = poolV

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.operators.Search
 
 /** Persisted inverted index as STORAGE LAYOUT: postings hive-partitioned
@@ -55,18 +56,17 @@ object SearchStore {
     // with no completion; each sidecar then swaps whole via rename, never
     // an in-place overwrite (StoreIO)
     StoreIO.appendManifest(spark, path, Seq("""{"op":"append-begin"}"""))
-    val p = Search.postings(newDocs).withColumn("bucket", bucketCol(nBuckets))
-      .localCheckpoint(true) // one pass over the new docs, reused below
+    // one pass over the new docs, reused below
+    val p = Checkpoint(Search.postings(newDocs).withColumn("bucket", bucketCol(nBuckets)))
     p.write.mode("append").partitionBy("bucket").parquet(path)
-    val mergedDf = spark.read.parquet(path + ".df")
+    // materialize before overwriting the input
+    val mergedDf = Checkpoint(spark.read.parquet(path + ".df")
       .unionByName(p.groupBy("term").agg(count(lit(1)).as("df")))
-      .groupBy("term").agg(sum("df").as("df"))
-      .localCheckpoint(true) // materialize before overwriting the input
+      .groupBy("term").agg(sum("df").as("df")))
     StoreIO.overwriteViaRename(spark, path + ".df", mergedDf)
-    val mergedN = spark.read.parquet(path + ".n")
+    val mergedN = Checkpoint(spark.read.parquet(path + ".n")
       .unionByName(newDocs.agg(count(lit(1)).as("n_docs")))
-      .agg(sum("n_docs").as("n_docs"))
-      .localCheckpoint(true)
+      .agg(sum("n_docs").as("n_docs")))
     StoreIO.overwriteViaRename(spark, path + ".n", mergedN)
     StoreIO.appendManifest(spark, path, Seq("""{"op":"append"}"""))
   }

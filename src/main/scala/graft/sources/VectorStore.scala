@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Checkpoint
 import graft.functions.cosineSim
 import graft.operators.Vectors
 
@@ -164,8 +165,8 @@ object VectorStore {
     val oversized = sizes.filter { case (_, n) =>
       n > maxRatio * mean && n >= 2 }.keys.toSeq.sorted
     if (oversized.isEmpty) return Nil
-    val hot = store.where(col("cid").isin(oversized: _*))
-      .localCheckpoint(true) // scanned once per Lloyd round, cells-only
+    // scanned once per Lloyd round, cells-only
+    val hot = Checkpoint(store.where(col("cid").isin(oversized: _*)))
     // in-cell 2-means: seeds are each cell's two lowest ids; every round
     // is one broadcast of the 2·|oversized| sub-centroids + one
     // (cid, sub, dim)-keyed rounded mean — never a corpus scan
@@ -195,7 +196,7 @@ object VectorStore {
             round(col("m"), 6).as("m")))),
           s => s.getField("m")).as("cv"))
     }
-    val finalAssign = assign(cents2).localCheckpoint(true)
+    val finalAssign = Checkpoint(assign(cents2))
     val finalCents = cents2.join(
         finalAssign.select(col("cid"), col("sub")).distinct(),
         Seq("cid", "sub"), "left_semi")

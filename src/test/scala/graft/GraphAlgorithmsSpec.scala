@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.{GraphAlgorithms, PropertyGraph}
 
@@ -630,7 +631,9 @@ class GraphAlgorithmsSpec extends SparkSpec {
 
   test("the frontier and min-relaxation loops start no probe job: no " +
     "job's call site is isEmpty/count/collect in GraphAlgorithms") {
-    // the k-truss, coloring, MIS, matching and k-core peels are covered too
+    // the k-truss, coloring, MIS, matching and k-core peels, personalized
+    // PageRank's anchor count and the bootstrap CI's empty-set check are
+    // covered too
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val graph = g(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L)),
@@ -666,28 +669,75 @@ class GraphAlgorithmsSpec extends SparkSpec {
         GraphAlgorithms.jonesPlassmannAssign(edges.toDF("a", "b"), iters = 4),
         GraphAlgorithms.lubyMisAssign(edges.toDF("a", "b"), iters = 4),
         GraphAlgorithms.greedyMatching(edges.toDF("a", "b"), iters = 4),
-        GraphAlgorithms.kCoreSizes(graph, k = 2, iters = 4)
+        GraphAlgorithms.kCoreSizes(graph, k = 2, iters = 4),
+        GraphAlgorithms.personalizedPageRank(graph, "A", Seq("n1"), iters = 3, k = 10),
+        graft.operators.Metrics.bootstrapCi(
+          Seq((1L, Seq(1L, 2L), Seq(2L))).toDF("qid", "p", "l"),
+          col("qid"), col("p"), col("l"), b = 8)
       ).foreach(_.collect())
       org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     val sites = jobExecs.asScala.toSeq.map(id => execSites.getOrDefault(id, ""))
-    assert(sites.exists(_.startsWith("localCheckpoint at GraphAlgorithms.scala")),
+    assert(sites.exists(_.startsWith("localCheckpoint at Checkpoint.scala")),
       s"the listener saw none of the loops' checkpoints: $sites")
-    val probes = sites.filter(
-      _.matches("(isEmpty|count|collect) at GraphAlgorithms\\.scala:\\d+"))
+    val probes = sites.filter(_.matches(
+      "(isEmpty|count|collect) at (GraphAlgorithms|Metrics)\\.scala:\\d+"))
     assert(probes.isEmpty, s"probe jobs: ${probes.distinct}")
   }
 
   test("min-relaxation releases replaced rounds: sccBoundedStats leaves " +
     "as many persisted RDDs after 10 rounds as after 2") {
-    // a directed 12-cycle is still relaxing at round 10, so every round
-    // runs and replaces its predecessor's state
-    val edges = (1L to 12L).map(i => (i, i % 12 + 1)).toDF("a", "b")
-    def leftBehind(iters: Int): Int = {
+    // every loop below frees each round it replaces once the successor is
+    // materialized. Each input keeps its loop replacing state past round
+    // 2: a directed 12-cycle is still relaxing at round 10; the 4-truss
+    // of a triangulated open tube (6 rings of 5) peels one band per round
+    // from both ends for 6 rounds; the coloring, MIS, matching and 2-core
+    // peels on a 21-node path take several rounds; the rest run a fixed
+    // round count.
+    import graft.operators.{Curation, TextOps, Vectors}
+    val cycle = (1L to 12L).map(i => (i, i % 12 + 1)).toDF("a", "b")
+    def ring(r: Int, j: Int): Long = r * 5L + (j % 5) + 1
+    val tube = (for (r <- 0 until 6; j <- 0 until 5;
+                     (dr, dj) <- Seq((0, 1), (1, 0), (1, 1)) if r + dr < 6)
+      yield (ring(r, j), ring(r + dr, j + dj))).toDF("a", "b")
+    val pathEdges = (1L to 20L).map(i => (i, i + 1))
+    val path = pathEdges.toDF("a", "b")
+    val pathGraph = g(pathEdges, (1L to 21L).map(_ -> "A"))
+    // the walk reconstruction runs every hop round; its BFS stops at hop 2
+    val triangle = g(Seq((1L, 2L), (2L, 3L), (1L, 3L)), (1L to 3L).map(_ -> "A"))
+    val docs = Seq((1L, "abcdefghijkl mnopqrstuvwx abcdefmnopqr")).toDF("doc_id", "text")
+    val vecs = (0 until 20).map(k => (k.toLong,
+      Array(8.0f * (k % 2 * 2 - 1), 0.1f * (k % 3), 0.05f * (k % 5))))
+      .toDF("vec_id", "embedding")
+    val labeled = ((0L until 6L).map(i => (i, "alpha beta gamma delta")) ++
+      (10L until 16L).map(i => (i, "omega"))).toDF("doc_id", "text")
+    // the graphs' session caches are built once, outside the counts
+    Seq(pathGraph, triangle).foreach { gr => gr.adjPairs.count(); gr.bidirTriples.count() }
+    val loops: Seq[(String, Int => DataFrame)] = Seq(
+      "sccBoundedStats" -> (n => GraphAlgorithms.sccBoundedStats(cycle, n)),
+      "kTrussStats" -> (n => GraphAlgorithms.kTrussStats(tube, k = 4, n)),
+      "jonesPlassmannAssign" -> (n => GraphAlgorithms.jonesPlassmannAssign(path, n)),
+      "lubyMisAssign" -> (n => GraphAlgorithms.lubyMisAssign(path, n)),
+      "greedyMatching" -> (n => GraphAlgorithms.greedyMatching(path, n)),
+      "kCoreSizes" -> (n => GraphAlgorithms.kCoreSizes(pathGraph, k = 2, n)),
+      "personalizedPageRank" ->
+        (n => GraphAlgorithms.personalizedPageRank(pathGraph, "A", Seq("n1"), n, k = 5)),
+      "labelPropagationSizes" -> (n => GraphAlgorithms.labelPropagationSizes(pathGraph, n)),
+      "hits" -> (n => GraphAlgorithms.hits(pathGraph, n, k = 5)),
+      "bpeLearnMerges" -> (n => TextOps.bpeLearnMerges(docs, n)),
+      "powerIterationTopDir" ->
+        (n => Vectors.powerIterationTopDir(vecs, "vec_id", "embedding", n)),
+      "classifierTrainStats" -> (n =>
+        Curation.classifierTrainStats(labeled, dim = 16, iters = n, lenThreshold = 3)),
+      // the parser caps shortestPath at 8 hops
+      "shortestPath walks" -> (n => graft.cypher.Planner.run(triangle,
+        s"""MATCH p = shortestPath((a:A {name: "n1"})-[*1..${math.min(n, 8)}]-(x))
+          |RETURN nodes(p) AS ns""".stripMargin)))
+    def leftBehind(run: Int => DataFrame, iters: Int): Int = {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val result = GraphAlgorithms.sccBoundedStats(edges, iters)
+      val result = run(iters)
       result.collect()
       val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
       // the result's own checkpoint must not be garbage-collected (and so
@@ -696,7 +746,9 @@ class GraphAlgorithmsSpec extends SparkSpec {
       added.values.foreach(_.unpersist(blocking = true))
       added.size
     }
-    assert(leftBehind(10) === leftBehind(2))
+    val leaks = loops.collect { case (name, run)
+      if leftBehind(run, 10) != leftBehind(run, 2) => name }
+    assert(leaks.isEmpty, s"loops keeping replaced rounds: $leaks")
   }
 
   test("temporalGrowth: cumulative counts from first occurrences only") {
