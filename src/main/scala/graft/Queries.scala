@@ -425,7 +425,6 @@ object Queries {
       queryVec(spark, dir), k = 10, nProbe = 64)
   }
 
-  /** IVF with k-means-trained centroids (2 unrolled Lloyd iterations). */
   /** Mean-centered cosine top-10 from the vec-0 query (anisotropy-
     * corrected retrieval). */
   def embCenteredTopK(spark: SparkSession, dir: String): DataFrame =
@@ -444,6 +443,7 @@ object Queries {
     Vectors.kmeansQualityReport(T(spark, dir, "embeddings"), "vec_id",
       "embedding", nCentroids = 8, lloydIters = 2)
 
+  /** IVF with k-means-trained centroids (2 unrolled Lloyd iterations). */
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
     ivfKmeansOn(T(spark, dir, "embeddings"), queryVec(spark, dir))
 
@@ -764,34 +764,29 @@ object Queries {
     t3Select(Retrieval.budgetedAssemble(t3Queries(spark, dir),
       maxNodes = 20, maxTokens = 100000L, patternRate = 0.5))
 
-  /** A5 — IR metric suite, macro-averaged (compute_metrics.py:3-64). Preds =
-    * per-order top-10 parts by quantity; gold = discounted parts. */
-  def a5IrMetrics(spark: SparkSession, dir: String): DataFrame = {
+  /** The a5 question set, one row per order: preds = the order's top-10
+    * parts by quantity, labels = its discounted parts. */
+  private def a5Arrays(spark: SparkSession, dir: String): DataFrame = {
     val per = T(spark, dir, "lineitem")
       .groupBy("l_orderkey", "l_partkey")
       .agg(sum("l_quantity").as("q"), max("l_discount").as("d"))
-    val arrays = per.groupBy("l_orderkey").agg(
+    per.groupBy("l_orderkey").agg(
       slice(transform(
         array_sort(collect_list(struct((-col("q")).as("nq"), col("l_partkey").as("pk")))),
         s => s.getField("pk")), 1, 10).as("preds"),
       sort_array(collect_list(when(col("d") > 0.05, col("l_partkey")))).as("labels"))
-    Metrics.macroAvg(arrays, col("preds"), col("labels"))
   }
+
+  /** A5 — IR metric suite, macro-averaged (compute_metrics.py:3-64) over
+    * [[a5Arrays]]. */
+  def a5IrMetrics(spark: SparkSession, dir: String): DataFrame =
+    Metrics.macroAvg(a5Arrays(spark, dir), col("preds"), col("labels"))
 
   /** Bootstrap CIs over the a5 question set — same preds/labels arrays,
     * 64 derandomized resamples, order-statistic interval. */
-  def a5IrBootstrap(spark: SparkSession, dir: String): DataFrame = {
-    val per = T(spark, dir, "lineitem")
-      .groupBy("l_orderkey", "l_partkey")
-      .agg(sum("l_quantity").as("q"), max("l_discount").as("d"))
-    val arrays = per.groupBy("l_orderkey").agg(
-      slice(transform(
-        array_sort(collect_list(struct((-col("q")).as("nq"), col("l_partkey").as("pk")))),
-        s => s.getField("pk")), 1, 10).as("preds"),
-      sort_array(collect_list(when(col("d") > 0.05, col("l_partkey")))).as("labels"))
-    Metrics.bootstrapCi(arrays, col("l_orderkey"), col("preds"),
+  def a5IrBootstrap(spark: SparkSession, dir: String): DataFrame =
+    Metrics.bootstrapCi(a5Arrays(spark, dir), col("l_orderkey"), col("preds"),
       col("labels"), b = 64)
-  }
 
   /** A6 + P7 — candidate ranking by (-hits, num_results) with the
     * recall/precision training gate (llm1.py:53-66). */
@@ -3737,12 +3732,12 @@ object Queries {
   def entry(spark: SparkSession): DataFrame =
     j2OneHop(spark, "/root/testdata/sf0.001")
 
-  /** The `--quick` gate tier: a §2-critical subset (~70 entries — every
-    * SURVEY §2 operator family plus one representative per pipeline
-    * family) for the inner dev loop; the FULL catalog remains the
-    * round-close gate. Verify takes `--quick` as its third argument,
-    * Bench honors `SPARK_GRAFT_QUICK=1`; QuickSetSpec pins every name to
-    * the catalog. */
+  /** The `--quick` gate tier: a §2-critical subset (100 entries, the cap
+    * QuickSetSpec enforces — every SURVEY §2 operator family plus one
+    * representative per pipeline family) for the inner dev loop; the FULL
+    * catalog remains the round-close gate. Verify takes `--quick` as its
+    * third argument, Bench honors `SPARK_GRAFT_QUICK=1`; QuickSetSpec pins
+    * every name to the catalog. */
   val quick: Set[String] = Set(
     // §2 core: storage/patterns/joins/aggregates/vectors/rank/templates
     "s2_constraint_check", "j2_onehop", "j2_onehop_bucketed",

@@ -3174,14 +3174,6 @@ object Planner {
                     params: Map[String, Any]): DataFrame =
     new Planner(g, params).planBulkUpsert(Parser.parseBulkUpsert(cypher))
 
-  /** Parse + plan the bulk relationship upsert (`UNWIND $pairs AS pr
-    * MATCH … MATCH … MERGE/CREATE (src)-[:T]->(tgt)` — the reference
-    * loader's edge statement), returning the post-mutation relationships
-    * table. */
-  def runBulkRel(g: PropertyGraph, cypher: String,
-                 params: Map[String, Any]): DataFrame =
-    new Planner(g, params).planBulkRel(Parser.parseBulkRel(cypher))
-
   /** Parse + plan `CREATE (n:L {nodeId: …})`, returning the post-create
     * graph. */
   def runCreateNodes(g: PropertyGraph, cypher: String): PropertyGraph =

@@ -115,15 +115,6 @@ object Vectors {
       .select(col(idCol), col("similarity"))
   }
 
-  /** IVF (inverted-file) ANN — the standard coarse-quantization scale path:
-    * "train" centroids (deterministically: the first `nCentroids` vectors by
-    * id — a seeded sample stands in for k-means, which would be an offline
-    * job at 100 TB), assign every vector to its nearest centroid (one
-    * broadcast join — the centroid table is tiny), then at query time probe
-    * only the `nProbe` centroids nearest the query. With the centroid id as
-    * a partition key the probe prunes the scan to ~nProbe/nCentroids of the
-    * data; here it prunes rows via a broadcast semi-join.
-    */
   /** Assignment: argmax cosine over centroids (broadcast nested loop is
     * fine — |centroids| is small by construction; ties → smallest cid).
     * Input columns (id, v); centroid columns (cid, cv). */
@@ -154,6 +145,15 @@ object Vectors {
       .select(col("id").as(idCol), col("similarity"))
   }
 
+  /** IVF (inverted-file) ANN — the standard coarse-quantization scale path:
+    * "train" centroids (deterministically: the first `nCentroids` vectors by
+    * id — a seeded sample stands in for k-means, which would be an offline
+    * job at 100 TB), assign every vector to its nearest centroid (one
+    * broadcast join — the centroid table is tiny), then at query time probe
+    * only the `nProbe` centroids nearest the query. With the centroid id as
+    * a partition key the probe prunes the scan to ~nProbe/nCentroids of the
+    * data; here it prunes rows via a broadcast semi-join.
+    */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               query: Seq[Double], k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
     val vec = col(vecCol).cast("array<double>")
@@ -164,15 +164,6 @@ object Vectors {
     ivfSearch(assigned, centroids, idCol, query, k, nProbe)
   }
 
-  /** IVF with k-means-TRAINED centroids: a fixed number of Lloyd
-    * iterations refines the seeded centroids (assign → per-dimension mean,
-    * components rounded to 6 decimals so both engines agree bit-for-bit).
-    * Fixed iteration count keeps it deterministic AND oracle-expressible —
-    * the DuckDB oracle unrolls the same iterations as CTEs, like the
-    * PageRank oracle. At 100 TB the train loop runs on a sample as an
-    * offline job; each iteration here is one broadcast assign (narrow) +
-    * one (cid, dim)-keyed mean (one shuffle of |N|·dim skinny rows).
-    * Clusters that lose all members drop out naturally. */
   /** Seeded + Lloyd-refined k-means centroids over (id, v) rows — the
     * shared deterministic trainer behind [[ivfKmeansTopK]] and
     * [[Dedup.semanticDedup]]: seeds are the first `nCentroids` vectors by
@@ -245,6 +236,15 @@ object Vectors {
         min("cm").as("worst_cos_micro"))
   }
 
+  /** IVF with k-means-TRAINED centroids: a fixed number of Lloyd
+    * iterations refines the seeded centroids (assign → per-dimension mean,
+    * components rounded to 6 decimals so both engines agree bit-for-bit).
+    * Fixed iteration count keeps it deterministic AND oracle-expressible —
+    * the DuckDB oracle unrolls the same iterations as CTEs, like the
+    * PageRank oracle. At 100 TB the train loop runs on a sample as an
+    * offline job; each iteration here is one broadcast assign (narrow) +
+    * one (cid, dim)-keyed mean (one shuffle of |N|·dim skinny rows).
+    * Clusters that lose all members drop out naturally. */
   def ivfKmeansTopK(emb: DataFrame, idCol: String, vecCol: String,
                     query: Seq[Double], k: Int, nCentroids: Int, nProbe: Int,
                     lloydIters: Int = 2): DataFrame = {

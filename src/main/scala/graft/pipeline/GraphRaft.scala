@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
-import graft.operators.{Patterns, Retrieval, Vectors}
+import graft.operators.{Retrieval, Vectors}
 import graft.cypher.{Ast, Parser, Planner}
 import graft.functions.normName
 
@@ -285,11 +285,6 @@ object GraphRaft {
     assembly.result.select(col("nodeId"), col("name"), col("similarity"), col("patterns"),
       col("rank"))
   }
-
-  // ---- answer-name lookup (retriever.py:111-115) ----
-
-  def answerNames(g: PropertyGraph, answerIds: Seq[Long]): Seq[String] =
-    Patterns.lookupByIds(g, answerIds).collect().map(_.getAs[String]("name")).toSeq
 
   // ---- end-to-end run (graphraft.py:41-66) ----
 

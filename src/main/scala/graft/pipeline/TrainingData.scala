@@ -58,8 +58,8 @@ object TrainingData {
     * (the double-UNWIND cross product U2), middle node counted — one job
     * for every question at once, trail semantics included. The far anchor
     * joins last, on (node, question id): keyed by question, this order ran
-    * faster on the training-set batch than the meet-in-the-middle order of
-    * [[graft.operators.Patterns.twoPath]]. */
+    * faster on the training-set batch than the meet-in-the-middle order
+    * the Cypher planner gives an anchored far node. */
   def twoPathCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
     val near = anchors(g, qa)
     val left = near.select(col("id"), col("answer_ids"),

@@ -81,6 +81,22 @@ class PatternsSpec extends SparkSpec {
       (1L, "AFFILIATED_WITH", "AFFILIATED_WITH"),
       (20L, "WRITES", "WRITES"),
       (20L, "REVIEWS", "WRITES")))
+
+    // overlapping anchor sets: both orders of the pair meet, but never an
+    // anchor with itself — without src1 <> src2 the parallel pair e4/e12
+    // would add Alice-P-alpha-Alice twice (WRITES/REVIEWS, REVIEWS/WRITES)
+    val both = Seq("Alice", "Bob")
+    val crossed = Patterns.twoPath(g, "Author", both, "Author", both)
+      .select("src1_name", "src2_name", "mid_id", "rel1_type", "rel2_type").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3), r.getString(4)))
+    assert(crossed.length === 6)
+    assert(crossed.toSet === Set(
+      ("Alice", "Bob", 1L, "AFFILIATED_WITH", "AFFILIATED_WITH"),
+      ("Alice", "Bob", 20L, "WRITES", "WRITES"),
+      ("Alice", "Bob", 20L, "REVIEWS", "WRITES"),
+      ("Bob", "Alice", 1L, "AFFILIATED_WITH", "AFFILIATED_WITH"),
+      ("Bob", "Alice", 20L, "WRITES", "WRITES"),
+      ("Bob", "Alice", 20L, "WRITES", "REVIEWS")))
   }
 
   test("J4 plan: each edge leg is anchor-filtered before the legs meet") {
@@ -148,6 +164,14 @@ class PatternsSpec extends SparkSpec {
     val names = Patterns.lookupByIds(g, Seq(1L, 30L, 777L))
       .collect().map(_.getString(2)).toSet
     assert(names === Set("MIT", "Databases"))
+  }
+
+  test("spliced labels and relationship types must be identifiers") {
+    // a label that closes the node pattern would otherwise rewrite the query
+    intercept[IllegalArgumentException](
+      Patterns.oneHop(g, "Author)-[x]-(y", Seq("Alice")))
+    intercept[IllegalArgumentException](Patterns.concreteTwoHop(g,
+      "Institution", "MIT", "AFFILIATED_WITH|WRITES", "Author", "WRITES", "Paper"))
   }
 
   test("P6 NFC-normalized lookup matches both Unicode forms") {
