@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
 import graft.operators.{Retrieval, Vectors}
@@ -192,15 +193,27 @@ object GraphRaft {
 
   // ---- candidate enumeration (path_retriever.py:49-64) ----
 
+  /** The target sets of the latest enumeration, keyed by candidate Cypher,
+    * and the graph instance they were read from. [[retrieveData]] reads a
+    * ranked candidate's targets from here instead of planning its Cypher:
+    * the enumeration already joined that path, and a set depends only on
+    * the graph and the text (every anchor named in the text is joined), so
+    * a match by reference on the graph is enough. Replaced, not merged, by
+    * each enumeration. */
+  @volatile private var memo: (PropertyGraph, Map[String, Array[Long]]) = (null, Map.empty)
+
   /** Enumerate candidate queries around the source names: 1-hop, 2-hop and
     * 2-path schema summaries with result counts, templated into concrete
     * Cypher like `create_query` (path_retriever.py:30-40). This is the
     * one-question view of [[TrainingData]]'s batched enumerators: the names
-    * become a one-row question frame, the requested patterns' candidates
-    * are unioned and filtered by `targetLabel` (the returned node's label:
-    * the target of a 1-hop or 2-hop, the middle of a 2-path), and ONE
-    * action collects them — O(schema) rows, like the reference collects
-    * records. With `goldIds` the supervision count (A2) becomes `hits`. */
+    * become a one-row question frame, the requested patterns' hop rows are
+    * unioned and filtered by `targetLabel` (the returned node's label: the
+    * target of a 1-hop or 2-hop, the middle of a 2-path), and ONE SQL
+    * execution collects the distinct (candidate, target, counted) rows —
+    * O(distinct candidate-target pairs). A candidate is a template with at
+    * least one counted target; `num_results` counts its distinct counted
+    * targets and, with `goldIds`, `hits` the gold ones among them (A2).
+    * Every target, counted or not, goes into [[memo]]. */
   def enumerateCandidates(g: PropertyGraph, srcNames: Seq[String],
                           goldIds: Option[Seq[Long]] = None,
                           patterns: Seq[String] = Seq("1hop", "2hop", "2path"),
@@ -211,16 +224,27 @@ object GraphRaft {
     val qa = Seq((0L, srcNames, goldIds.getOrElse(Seq.empty[Long])))
       .toDF("id", "entities", "answer_ids")
     val all = patterns.map {
-      case "1hop" => TrainingData.oneHopCandidates(g, qa) -> "tgt_label"
-      case "2hop" => TrainingData.twoHopCandidates(g, qa) -> "tgt_label"
-      case "2path" => TrainingData.twoPathCandidates(g, qa) -> "mid_label"
+      case "1hop" => TrainingData.oneHop(g, qa)
+      case "2hop" => TrainingData.twoHop(g, qa)
+      case "2path" => TrainingData.twoPath(g, qa)
       case other => throw new IllegalArgumentException(s"unknown pattern $other")
-    }.map { case (df, label) =>
-      df.select(col("cypher_query"), col("hits"), col("num_results"),
-        col(label).as("target_label"))
-    }.reduce(_.unionByName(_))
-    targetLabel.fold(all)(l => all.where(col("target_label") === l)).collect().toSeq
-      .map(r => Candidate(r.getString(0), goldIds.map(_ => r.getLong(1)), r.getLong(2)))
+    }.map(h => h.rows.select(h.cypher.as("cypher_query"), col(h.target).as("target"),
+      h.counted.as("counted"), col(h.targetLabel).as("target_label")))
+      .reduce(_.unionByName(_))
+    val rows = targetLabel.fold(all)(l => all.where(col("target_label") === l))
+      .select(col("cypher_query"), col("target"), col("counted")).distinct().collect()
+    val gold = goldIds.map(_.toSet)
+    val candidates = rows.groupBy(_.getString(0)).toSeq.flatMap { case (cypher, rs) =>
+      val counted = rs.collect { case r if r.getBoolean(2) => r.getLong(1) }.distinct
+      if (counted.isEmpty) None
+      else Some(Candidate(cypher, gold.map(s => counted.count(s).toLong), counted.length) ->
+        rs.map(_.getLong(1)).distinct)
+    }
+    // once SET/REMOVE rewrote labels, a pattern's label test reads `labels`,
+    // not the primary label the templates carry: such a graph is planned
+    if (!g.labelsMutated)
+      memo = (g, candidates.map { case (c, targets) => c.cypher -> targets }.toMap)
+    candidates.map(_._1)
   }
 
   // ---- budgeted retrieval (retriever.py:63-109) ----
@@ -229,26 +253,44 @@ object GraphRaft {
     * (structural modify_query), execute in rank order, assemble under the
     * budget with first-wins dedup + provenance, then backfill with global
     * vector KNN excluding found ids (`pattern` = "No pattern",
-    * retriever.py:96-107). Both phases run one [[Retrieval.Assembly]]
-    * loop over one state: the query phase checks the budget at
-    * `patternRate` (retriever.py:87), the backfill at rate 1 over the TOTAL
-    * context — query-found nodes included (retriever.py:105). Each phase
-    * is one Spark action; the result is a local DataFrame in rank order. */
+    * retriever.py:96-107). A query that the latest [[enumerateCandidates]]
+    * on this `g` produced is not planned: its rows are its target nodes,
+    * read from [[memo]] by one node scan shared by all such queries and
+    * scored like the planner's `Cosine`; any other query is planned. Both
+    * phases run one [[Retrieval.Assembly]] loop over one state: the query
+    * phase checks the budget at `patternRate` (retriever.py:87), the
+    * backfill at rate 1 over the TOTAL context — query-found nodes included
+    * (retriever.py:105). Each phase is one Spark action, plus the target
+    * scan when a query hit the memo; the result is a local DataFrame in
+    * rank order. */
   def retrieveData(g: PropertyGraph, topQueries: Seq[String], qEmb: Seq[Double],
                    nodeProps: Seq[String] = Seq("name"),
                    sortingIndex: String = "nameEmbedding",
                    maxNodes: Int = 20, maxTokens: Long = Long.MaxValue,
                    ef: Int = 10000, patternRate: Double = 1.0): DataFrame = {
-    val params = Map("questionEmbedding" -> qEmb)
-    val planner = new Planner(g, params)
+    val spark = g.nodes.sparkSession
+    val extraProps = nodeProps.filterNot(Set("name", "nodeId"))
+    // node rows as the context carries them, scored against the question
+    def scored(where: Column): DataFrame = Vectors.scored(
+      g.nodes.where(where).select(Seq(col("nodeId"), col("name"), col(sortingIndex)) ++
+        extraProps.map(col): _*),
+      sortingIndex, qEmb)
+    val known = memo match {
+      case (mg, targets) if mg eq g => topQueries.flatMap(q => targets.get(q).map(q -> _)).toMap
+      case _ => Map.empty[String, Array[Long]]
+    }
+    lazy val targetRows = {
+      val scan = scored(col("nodeId").isin(known.values.flatten.toSeq.distinct: _*))
+        .select((col("nodeId") +: ("name" +: extraProps).map(col)) :+ col("similarity"): _*)
+      (scan.schema, scan.collect().map(r => r.getLong(0) -> r).toMap)
+    }
+    lazy val planner = new Planner(g, Map("questionEmbedding" -> qEmb))
     val perQuery = topQueries.map { q =>
       val ast = Parser.parse(q)
       val tgtVar = ast.items.head.expr match {
         case Ast.PropRef(v, _) => v
         case other => throw new IllegalArgumentException(s"candidate must return a property, got $other")
       }
-      val widened = ast.widenForRetrieval(tgtVar, nodeProps.filter(_ != "nodeId"),
-        sortingIndex, "questionEmbedding")
       // pattern text ≙ query_to_text_pattern (retriever.py:9-12): the MATCH
       // pattern with the target re-anchored by the matched row's name —
       // done structurally (render the path, splice the per-row anchor).
@@ -266,19 +308,21 @@ object GraphRaft {
           concat(lit(before), lit(tgtText.dropRight(1) + " {name: \""),
             col("name"), lit("\"})"), lit(after))
       }
-      planner.plan(widened).withColumn("pattern", pattern)
+      val rows = known.get(q) match {
+        case Some(ids) =>
+          val (schema, byId) = targetRows
+          spark.createDataFrame(ids.toSeq.flatMap(byId.get).asJava, schema)
+        case None =>
+          planner.plan(ast.widenForRetrieval(tgtVar, nodeProps.filter(_ != "nodeId"),
+            sortingIndex, "questionEmbedding"))
+      }
+      rows.withColumn("pattern", pattern)
     }
-    val extraProps = nodeProps.filterNot(Set("name", "nodeId"))
-    val assembly = new Retrieval.Assembly(g.nodes.sparkSession, maxNodes, maxTokens,
-      "name" +: extraProps)
+    val assembly = new Retrieval.Assembly(spark, maxNodes, maxTokens, "name" +: extraProps)
     assembly.run(perQuery, patternRate)
     // KNN backfill from the same state: global top-ef excluding the found
     // nodes, at rate 1 over the TOTAL context (retriever.py:96-107)
-    val knn = Vectors.scored(
-        g.nodes.where(col(sortingIndex).isNotNull && !col("nodeId").isin(assembly.nodeIds: _*))
-          .select(Seq(col("nodeId"), col("name"), col(sortingIndex)) ++
-            extraProps.map(col): _*),
-        sortingIndex, qEmb)
+    val knn = scored(col(sortingIndex).isNotNull && !col("nodeId").isin(assembly.nodeIds: _*))
       .withColumn("similarity", round(col("similarity"), 6))
       .withColumn("pattern", lit("No pattern"))
     assembly.run(Seq(knn), rate = 1.0, limit = ef)

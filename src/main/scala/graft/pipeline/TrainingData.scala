@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
@@ -8,7 +8,8 @@ import graft.operators.{Patterns, Retrieval}
 
 /** LLM1 training-data generation (SURVEY §3.2; reference
   * training/generate_training_data_llm1.ipynb cells 3-4 + llm1.py:166-180)
-  * re-expressed as ONE distributed DataFrame job.
+  * re-expressed as distributed DataFrame pipelines, each one SQL execution
+  * over every question at once.
   *
   * The reference maps over QA rows with `num_proc=8`, issuing per-row Neo4j
   * round-trips for the path-schema queries. Spark-first, the same
@@ -28,39 +29,76 @@ object TrainingData {
   /** qa: (id, question, entities: array<string>, answer_ids: array<long>).
     * Returns one row per (question, 1-hop path schema): the templated
     * candidate + num_results + hits. */
-  def oneHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
-    val hops = anchors(g, qa)
+  def oneHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = summarize(oneHop(g, qa))
+
+  /** 2-hop variant of [[oneHopCandidates]] — the same shape, one SQL
+    * execution, with one more edge join and full trail semantics (r1 ≠ r2
+    * on the stored-edge identity triple); only targets other than the
+    * anchor are counted. */
+  def twoHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = summarize(twoHop(g, qa))
+
+  /** 2-path variant: both endpoints anchored in the question's entity set
+    * (the double-UNWIND cross product U2), middle node counted — one SQL
+    * execution for every question, trail semantics included; only paths
+    * between two distinct anchor nodes are counted. */
+  def twoPathCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = summarize(twoPath(g, qa))
+
+  /** One pattern's hop rows for every question and the path schema its
+    * candidates are templated from. `nodes` are (label column, anchor-name
+    * column) in path order, `rels` the relationship-type columns between
+    * them, `returned` the 1-based position of the node the query returns
+    * and `target` that node's id column. The rows are exactly the bindings
+    * the candidate's Cypher matches under trail semantics; `counted` marks
+    * those whose target counts toward `num_results` (a 2-hop target other
+    * than its anchor, a 2-path between two distinct anchor nodes). */
+  private[pipeline] final case class Hops(rows: DataFrame, target: String,
+                                          nodes: Seq[(String, Option[String])],
+                                          rels: Seq[String], returned: Int,
+                                          counted: Column) {
+    def targetLabel: String = nodes(returned - 1)._1
+
+    /** The `create_query` template (path_retriever.py:30-40) over the
+      * schema columns — of a hop row or of a summarized group alike. */
+    def cypher: Column = {
+      val template = nodes.zipWithIndex.flatMap { case ((label, name), i) =>
+        Seq(lit(s"(x${i + 1}:"), col(label)) ++
+          name.toSeq.flatMap(n => Seq(lit(" {name: \""), col(n), lit("\"}"))) ++
+          Seq(lit(")")) ++
+          rels.lift(i).toSeq.flatMap(r => Seq(lit(s"-[r${i + 1}:"), col(r), lit("]-")))
+      }
+      concat((lit("MATCH ") +: template :+
+        lit(s" RETURN DISTINCT x$returned.name AS name")): _*)
+    }
+  }
+
+  private[pipeline] def oneHop(g: PropertyGraph, qa: DataFrame): Hops = {
+    val rows = anchors(g, qa)
       .join(g.bidir.as("e"), col("src_id") === col("e.a"))
       .join(labeled(g, "tgt"), col("e.b") === col("tgt_id"))
       .withColumn("rel_type", col("e.relType"))
-    summarize(hops, "tgt_id", Seq("src_label" -> Some("src_name"), "tgt_label" -> None),
-      Seq("rel_type"), returned = 2)
+    Hops(rows, "tgt_id", Seq("src_label" -> Some("src_name"), "tgt_label" -> None),
+      Seq("rel_type"), returned = 2, counted = lit(true))
   }
 
-  /** 2-hop variant of [[oneHopCandidates]] — same single-job shape with one
-    * more edge join and full trail semantics (r1 ≠ r2 on the stored-edge
-    * identity triple, tgt ≠ src). */
-  def twoHopCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
-    val hops = anchors(g, qa)
+  private[pipeline] def twoHop(g: PropertyGraph, qa: DataFrame): Hops = {
+    val rows = anchors(g, qa)
       .join(g.bidir.as("e1"), col("src_id") === col("e1.a"))
       .join(labeled(g, "mid"), col("e1.b") === col("mid_id"))
       .join(g.bidir.as("e2"), col("mid_id") === col("e2.a"))
       .join(labeled(g, "tgt"), col("e2.b") === col("tgt_id"))
-      .where(col("tgt_id") =!= col("src_id") && Patterns.trailNeq("e1", "e2"))
+      .where(Patterns.trailNeq("e1", "e2"))
       .withColumn("rel1_type", col("e1.relType"))
       .withColumn("rel2_type", col("e2.relType"))
-    summarize(hops, "tgt_id",
+    Hops(rows, "tgt_id",
       Seq("src_label" -> Some("src_name"), "mid_label" -> None, "tgt_label" -> None),
-      Seq("rel1_type", "rel2_type"), returned = 3)
+      Seq("rel1_type", "rel2_type"), returned = 3, counted = col("tgt_id") =!= col("src_id"))
   }
 
-  /** 2-path variant: both endpoints anchored in the question's entity set
-    * (the double-UNWIND cross product U2), middle node counted — one job
-    * for every question at once, trail semantics included. The far anchor
-    * joins last, on (node, question id): keyed by question, this order ran
-    * faster on the training-set batch than the meet-in-the-middle order
-    * the Cypher planner gives an anchored far node. */
-  def twoPathCandidates(g: PropertyGraph, qa: DataFrame): DataFrame = {
+  /** The far anchor joins last, on (node, question id): keyed by question,
+    * this order ran faster on the training-set batch than the
+    * meet-in-the-middle order the Cypher planner gives an anchored far
+    * node. */
+  private[pipeline] def twoPath(g: PropertyGraph, qa: DataFrame): Hops = {
     val near = anchors(g, qa)
     val left = near.select(col("id"), col("answer_ids"),
       col("src_id").as("src1_id"), col("src_label").as("src1_label"),
@@ -68,18 +106,19 @@ object TrainingData {
     val right = near.select(col("id").as("id2"),
       col("src_id").as("src2_id"), col("src_label").as("src2_label"),
       col("src_name").as("src2_name"))
-    val hops = left
+    val rows = left
       .join(g.bidir.as("e1"), col("src1_id") === col("e1.a"))
       .join(labeled(g, "mid"), col("e1.b") === col("mid_id"))
       .join(g.bidir.as("e2"), col("mid_id") === col("e2.a"))
       .join(right, col("e2.b") === col("src2_id") && col("id") === col("id2"))
-      .where(col("src1_id") =!= col("src2_id") && Patterns.trailNeq("e1", "e2"))
+      .where(Patterns.trailNeq("e1", "e2"))
       .withColumn("rel1_type", col("e1.relType"))
       .withColumn("rel2_type", col("e2.relType"))
-    summarize(hops, "mid_id",
+    Hops(rows, "mid_id",
       Seq("src1_label" -> Some("src1_name"), "mid_label" -> None,
         "src2_label" -> Some("src2_name")),
-      Seq("rel1_type", "rel2_type"), returned = 2)
+      Seq("rel1_type", "rel2_type"), returned = 2,
+      counted = col("src1_id") =!= col("src2_id"))
   }
 
   /** The anchor prelude every enumerator shares: one row per (question,
@@ -96,33 +135,21 @@ object TrainingData {
   private def labeled(g: PropertyGraph, p: String): DataFrame =
     g.nodes.select(col("nodeId").as(s"${p}_id"), col("label").as(s"${p}_label"))
 
-  /** The shared summarize step (path_retriever.py:49-64): group the hops by
-    * question and path schema, count distinct `target` nodes as
-    * `num_results` and the gold ones among them as `hits`, and fill in the
-    * `create_query` template (path_retriever.py:30-40). The schema is the
-    * path itself: `nodes` are (label column, anchor-name column) in path
-    * order, `rels` the relationship-type columns between them, `returned`
-    * the 1-based position of the node the query returns. */
-  private def summarize(hops: DataFrame, target: String,
-                        nodes: Seq[(String, Option[String])], rels: Seq[String],
-                        returned: Int): DataFrame = {
-    val keys = nodes.zipWithIndex.flatMap { case ((label, name), i) =>
-      (label +: name.toSeq) ++ rels.lift(i)
+  /** The shared summarize step (path_retriever.py:49-64): keep the counted
+    * hop rows, group them by question and path schema, count distinct
+    * targets as `num_results` and the gold ones among them as `hits`, and
+    * fill in the template. */
+  private def summarize(h: Hops): DataFrame = {
+    val keys = h.nodes.zipWithIndex.flatMap { case ((label, name), i) =>
+      (label +: name.toSeq) ++ h.rels.lift(i)
     }
-    val template = nodes.zipWithIndex.flatMap { case ((label, name), i) =>
-      Seq(lit(s"(x${i + 1}:"), col(label)) ++
-        name.toSeq.flatMap(n => Seq(lit(" {name: \""), col(n), lit("\"}"))) ++
-        Seq(lit(")")) ++
-        rels.lift(i).toSeq.flatMap(r => Seq(lit(s"-[r${i + 1}:"), col(r), lit("]-")))
-    }
-    hops
+    h.rows.where(h.counted)
       .groupBy((col("id") +: keys.map(col)): _*)
       .agg(
-        count_distinct(col(target)).as("num_results"),
-        count_distinct(when(array_contains(col("answer_ids"), col(target)),
-          col(target))).as("hits"))
-      .withColumn("cypher_query", concat((lit("MATCH ") +: template :+
-        lit(s" RETURN DISTINCT x$returned.name AS name")): _*))
+        count_distinct(col(h.target)).as("num_results"),
+        count_distinct(when(array_contains(col("answer_ids"), col(h.target)),
+          col(h.target))).as("hits"))
+      .withColumn("cypher_query", h.cypher)
   }
 
   /** T4 rank-biased candidate sampling, distributed (SURVEY §2.7;
@@ -148,8 +175,8 @@ object TrainingData {
   /** Batched per-question retrieval (SURVEY §3.3; reference retriever.py
     * runs one Neo4j session per QA row): given ONE picked 1-hop query per
     * question and the per-question embeddings (`q_emb` joined by id — the
-    * S6 broadcast lookup), execute EVERY question's retrieval in a single
-    * job: anchor joins carry the question id, cosine scores against the
+    * S6 broadcast lookup), execute EVERY question's retrieval in one SQL
+    * execution: anchor joins carry the question id, cosine scores against the
     * per-question embedding, and the node budget is a window partitioned by
     * question — per-question top-k with zero driver-side iteration. */
   def batchRetrieve1Hop(g: PropertyGraph, picked: DataFrame, qEmb: DataFrame,

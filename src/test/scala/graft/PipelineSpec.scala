@@ -123,6 +123,98 @@ class PipelineSpec extends SparkSpec {
     assert(starts.get === 1)
   }
 
+  /** Each candidate's retrieval on `graph`, read from the enumeration, next
+    * to the same retrieval on a copy of it — a distinct instance, so there
+    * the candidate is planned. No budget binds, so each result holds the
+    * candidate's whole target set. */
+  private def memoVsPlanned(graph: graft.graph.PropertyGraph, anchors: Seq[String],
+                            nodeProps: Seq[String], qEmb: Seq[Double]) = {
+    val planned = graph.copy()
+    GraphRaft.enumerateCandidates(graph, anchors).map { c =>
+      def retrieve(on: graft.graph.PropertyGraph) = {
+        val df = GraphRaft.retrieveData(on, Seq(c.cypher), qEmb, nodeProps,
+          maxNodes = Int.MaxValue, ef = 3)
+        (df.columns.toSeq, df.collect().toSeq)
+      }
+      (c, retrieve(graph), retrieve(planned))
+    }
+  }
+
+  test("retrieval read from the enumeration equals the planned candidate query") {
+    val micro = Seq(Seq("MIT"), Seq("Alice", "Bob"), Seq("Alice"), Seq("P-gamma"))
+      .map(a => a -> memoVsPlanned(g, a, Seq("name", "abstract"), Seq(0.3, -0.5, 0.7, 0.1)))
+    val tpch = graft.graph.TpchGraph(spark, "/root/testdata/sf0.001")
+    val tpchRuns = Seq("1", "Customer#000000001", "NATION_19")
+      .map(a => Seq(a) -> memoVsPlanned(tpch, Seq(a), Seq("name"),
+        Seq.tabulate(64)(i => math.sin(i + 1.0))))
+    (micro ++ tpchRuns).foreach { case (anchors, runs) =>
+      assert(runs.nonEmpty, anchors)
+      runs.foreach { case (c, fromMemo, planned) =>
+        assert(fromMemo === planned, s"$anchors: ${c.cypher}")
+      }
+    }
+    // the TPC-H query rows are scored: the embedding has the parts' 64 dims
+    assert(tpchRuns.flatMap(_._2).flatMap(_._2._2).exists(r =>
+      !r.isNullAt(r.fieldIndex("similarity")) &&
+        r.getSeq[String](r.fieldIndex("patterns")) != Seq("No pattern")))
+    // Alice's parallel REVIEWS/WRITES edges (e12/e4) lead this 2-hop back to
+    // Alice: the query returns her, but she is not counted as a result
+    val back = micro.find(_._1 == Seq("Alice")).get._2.find(_._1.cypher ==
+      """MATCH (x1:Author {name: "Alice"})-[r1:REVIEWS]-(x2:Paper)-[r2:WRITES]-(x3:Author) RETURN DISTINCT x3.name AS name""").get
+    assert(back._1.numResults === 1L)
+    assert(back._2._2.map(_.getAs[Long]("nodeId")).take(2).toSet === Set(10L, 11L))
+    // P-gamma's self-loop (e13) is a 1-hop to itself
+    assert(micro.find(_._1 == Seq("P-gamma")).get._2.exists(_._1.cypher ==
+      """MATCH (x1:Paper {name: "P-gamma"})-[r1:CITES]-(x2:Paper) RETURN DISTINCT x2.name AS name"""))
+  }
+
+  test("retrieval of enumerated candidates joins nothing; a planned candidate joins") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val top = GraphRaft.HeuristicRanker.rank(
+      GraphRaft.enumerateCandidates(g, Seq("Alice", "Bob")), 5).map(_.cypher)
+    // for every plan the retrieval executes: does it contain a join?
+    def joins(graph: graft.graph.PropertyGraph): Seq[Boolean] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+      val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          plans.add(find(qe.executedPlan)(_.isInstanceOf[BaseJoinExec]).isDefined)
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        GraphRaft.retrieveData(graph, top, Seq(1.0, 0.0, 0.0, 0.0))
+        org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      plans.toArray.toSeq.map(_.asInstanceOf[Boolean])
+    }
+    assert(top.length === 5)
+    val fromMemo = joins(g)
+    assert(fromMemo.nonEmpty)
+    assert(!fromMemo.contains(true))
+    assert(joins(g.copy()).contains(true))
+  }
+
+  test("retrieval on a graph whose labels were rewritten plans its candidates") {
+    // P is written by A and B and writes Q; once B is also a Paper, the
+    // 2-hop to (x3:Paper) matches B, which the enumeration labels Author
+    val nodes = Seq((1L, "Author", "A"), (2L, "Paper", "P"), (3L, "Author", "B"),
+        (4L, "Paper", "Q")).toDF("nodeId", "label", "name")
+      .withColumn("labels", array(col("label"), lit("_Entity_")))
+      .withColumn("nameEmbedding", array(lit(1.0), lit(0.0)))
+    val rels = Seq(("WRITES", 1L, 2L), ("WRITES", 2L, 4L), ("WRITES", 3L, 2L))
+      .toDF("relType", "src", "dst")
+    val relabeled = graft.cypher.Planner.runMutation(graft.graph.PropertyGraph(nodes, rels),
+      """MATCH (b:Author {name: "B"}) SET b:Paper""")
+    val q = """MATCH (x1:Author {name: "A"})-[r1:WRITES]-(x2:Paper)-[r2:WRITES]-(x3:Paper) RETURN DISTINCT x3.name AS name"""
+    assert(GraphRaft.enumerateCandidates(relabeled, Seq("A")).find(_.cypher == q)
+      .map(_.numResults) === Some(1L))
+    assert(GraphRaft.retrieveData(relabeled, Seq(q), Seq(1.0, 0.0), ef = 0).collect()
+      .map(_.getAs[Long]("nodeId")).toSet === Set(3L, 4L))
+  }
+
   test("heuristic ranker: (-hits, num_results) like llm1.py:53-58") {
     val ranked = GraphRaft.HeuristicRanker.rank(Seq(
       GraphRaft.Candidate("a", Some(1L), 10L),
